@@ -304,7 +304,8 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both sides are corpus-sized per-doc aggregates whose static size
     # estimates are bogus-small — pin the spill-safe sort-merge strategy
     # so the planner never broadcasts a |docs|-row frame (same pinning
-    # discipline as the dedup family; caught by tools/audit_broadcast.py).
+    # discipline as the dedup family; caught by the per-query broadcast
+    # check in tests/test_oracle.py).
     return (
         before.hint("merge").join(after, "doc_id")
         .groupBy(

@@ -116,7 +116,9 @@ def rdiv_halfup_spark(
     """
     s = 10**digits
     d = den.strip()
-    den_lit = int(d) if d.isdigit() else None
+    # ASCII only: str.isdigit() also accepts '²' (int() raises) and
+    # '٣' (int() gives 3, but the SQL text is no literal).
+    den_lit = int(d) if d.isascii() and d.isdigit() else None
     a = f"({num})" if nonneg else f"abs({num})"
     if den_lit == 1:
         # exact integer render: string parse and BIGINT->DOUBLE cast are

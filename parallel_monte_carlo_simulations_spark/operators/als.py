@@ -129,9 +129,10 @@ def q_recsys_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
         # join), and a materialized cache exposes its partitioning to
         # their plans, so those three corpus exchanges disappear; only
         # the user_id-keyed half-steps still shuffle. Same-JVM A/B
-        # (tools/exp_als_r13.py, 4 interleaved reps): median 6.89 s ->
-        # 3.45 s, min 5.68 -> 2.97 at sf0.1/local[32], 50-row output
-        # asserted cell-identical. P is byte-derived so the pin stays
+        # (OPTIMIZATION_r13.md, "q_recsys_als_rank1"; 4 interleaved
+        # reps): median 6.89 s -> 3.45 s, min 5.68 -> 2.97 at
+        # sf0.1/local[32], 50-row output asserted cell-identical. P is
+        # byte-derived so the pin stays
         # in the guide's partition-size band at any deployment scale.
         .repartition(adaptive_partitions(spark, sf_dir), "item_id")
         .persist()

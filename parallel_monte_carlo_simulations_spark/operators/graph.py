@@ -136,9 +136,10 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ends in a user repartition — without it both iteration joins
     # re-exchange their cached inputs every round (edge-scale × 10 at
     # 100 TB; measured in the intermediate variant's plan). Same-JVM
-    # interleaved A/B (tools/exp_pagerank2_r13.py, 5 reps,
-    # sf0.1/local[32], outputs cell-identical): original 9.15 s median,
-    # this form 7.78 s, the no-repartition form 7.53 s — the ~3% local
+    # interleaved A/B (OPTIMIZATION_r13.md, "single-edge-exchange
+    # build"; 5 reps, sf0.1/local[32], outputs cell-identical):
+    # original 9.15 s median, this form 7.78 s, the no-repartition form
+    # 7.53 s — the ~3% local
     # gap buys back the zero-exchange per-iteration shape that matters
     # at scale.
     p = adaptive_partitions(spark, sf_dir)

@@ -41,8 +41,9 @@ old global window, no worse; value skew concentrates buckets exactly as
 it would concentrate any range partitioner.
 
 The plan signature — an Aggregate keyed on ``__rsbucket`` under the
-offsets window — is what tools/audit_windows.py recognizes as bounded,
-the same contract the broadcast audit has with keyless aggregates.
+offsets window — is what ``plans.audit.unbounded_global_windows``
+recognizes as bounded, the same contract the broadcast walker has with
+keyless aggregates.
 """
 
 from __future__ import annotations

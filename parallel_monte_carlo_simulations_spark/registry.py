@@ -92,27 +92,6 @@ def load_all_queries() -> dict[str, QuerySpec]:
     return _driver_order(REGISTRY)
 
 
-#: Judge-named verification asks for the CURRENT round: hoisted to the
-#: head of the tier-0 backlog (they are already-waiting backlog members,
-#: so this reorders within the tier, never jumps new work over it).
-#: Round 11 (VERDICT item 2): the 11 late round-10 registrations that
-#: have only judge-mirror evidence — landing these in the r11 window
-#: gives every oracled query REAL driver-window evidence.
-_ROUND_ASKS = (
-    "q_curation_dup_flow_matrix",
-    "q_curation_funnel_report",
-    "q_feat_mutual_information",
-    "q_stat_brown_forsythe",
-    "q_stat_cramers_v",
-    "q_stat_jarque_bera",
-    "q_stat_pearson_matrix",
-    "q_text_js_divergence",
-    "q_text_ngram_novelty",
-    "q_text_token_entropy",
-    "q_text_vocab_growth",
-)
-
-
 def _driver_order(registry: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
     try:
         from .coverage import DRIVER_COVERED
@@ -145,8 +124,4 @@ def _driver_order(registry: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
             for n in chain.from_iterable(zip_longest(*module_lists))
             if n is not None
         )
-    # Hoist the round's judge-named asks (backlog members only) to the
-    # very front so the 50-query window can't round-robin them out.
-    asks = [n for n in _ROUND_ASKS if n in ordered and DRIVER_COVERED.get(n, 0) == 0]
-    rest = [n for n in ordered if n not in asks]
-    return {n: registry[n] for n in asks + rest}
+    return {n: registry[n] for n in ordered}

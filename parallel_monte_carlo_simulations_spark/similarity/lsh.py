@@ -105,7 +105,8 @@ def _buckets_np(emb: pd.Series) -> pd.Series:
     below runs ``acc = acc + X[:, d] * w_d`` per dim: the same two ops
     per element in the same order (separate numpy ufunc calls — no FMA
     fusion), so every dot, sign bit and bucket is bit-identical.
-    Measured ×2.3 on q_sim_lsh_topk at sf0.1 (tools/exp_lshbucket_r13.py;
+    Measured ×2.3 on q_sim_lsh_topk at sf0.1 (OPTIMIZATION_r13.md,
+    "q_sim_lsh_topk: bucket computation vectorized";
     the einsum/matmul forms are faster still but use pairwise summation
     — a DIFFERENT add order — and were therefore not considered).
     NULL embeddings mirror the expression form's semantics: a NULL dot

@@ -9,6 +9,7 @@ literally identical numbers).
 
 from __future__ import annotations
 
+import functools
 import math
 from typing import Any
 
@@ -17,7 +18,10 @@ import duckdb
 from parallel_monte_carlo_simulations_spark.tables import TABLE_NAMES
 
 
+@functools.cache
 def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """One shared connection per ``sf_dir`` for the whole test session,
+    with a view per table. Callers must not close it."""
     con = duckdb.connect()
     for name in TABLE_NAMES:
         con.execute(
@@ -72,9 +76,7 @@ def _normalize(rows: list[dict[str, Any]]) -> list[tuple]:
 def compare(spark_df, oracle: str, sf_dir: str) -> dict[str, Any]:
     """Return a comparison report dict; report['ok'] is the verdict."""
     spark_pd = spark_df.toPandas()
-    con = duckdb_connection(sf_dir)
-    duck_pd = con.execute(oracle).fetchdf()
-    con.close()
+    duck_pd = duckdb_connection(sf_dir).execute(oracle).fetchdf()
 
     report: dict[str, Any] = {
         "spark_rows": len(spark_pd),

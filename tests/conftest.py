@@ -55,7 +55,7 @@ def pytest_runtest_call(item):
         return
 
     # @pytest.mark.timeout_s(N) overrides the default budget for the
-    # few legitimately-long tests (the registry-wide plan audit).
+    # few legitimately-long tests (the sf1.0 reference tests).
     marker = item.get_closest_marker("timeout_s")
     budget = int(marker.args[0]) if marker else TEST_TIMEOUT_S
 

@@ -29,10 +29,7 @@ def test_qmc_greeks_match_black_scholes():
 
     spec = load_all_queries()["q_mc_gbm_qmc_greeks"]
     con = duckdb_connection("/root/testdata/sf0.01")
-    try:
-        n, delta, delta_se, vega, vega_se = con.execute(spec.oracle).fetchone()
-    finally:
-        con.close()
+    n, delta, delta_se, vega, vega_se = con.execute(spec.oracle).fetchone()
     d1 = (math.log(S0 / STRIKE) + (R + 0.5 * SIGMA**2) * T) / (
         SIGMA * math.sqrt(T)
     )
@@ -51,10 +48,7 @@ def test_barrier_dominated_by_vanilla():
 
     spec = load_all_queries()["q_mc_qmc_barrier"]
     con = duckdb_connection("/root/testdata/sf0.01")
-    try:
-        n, uoc, vanilla, se, knocked = con.execute(spec.oracle).fetchone()
-    finally:
-        con.close()
+    n, uoc, vanilla, se, knocked = con.execute(spec.oracle).fetchone()
     assert 0 < knocked < n
     assert uoc < vanilla
     assert uoc >= 0 and se >= 0

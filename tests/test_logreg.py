@@ -50,10 +50,7 @@ def _irls(buckets, n_iter):
 
 def test_newton_steps_converge_toward_mle():
     con = duckdb_connection(SF)
-    try:
-        buckets = con.execute(_BUCKETS_SQL).fetchall()
-    finally:
-        con.close()
+    buckets = con.execute(_BUCKETS_SQL).fetchall()
     b0_1, b1_1 = _irls(buckets, 1)
     b0_2, b1_2 = _irls(buckets, 2)
     b0_inf, b1_inf = _irls(buckets, 50)
@@ -67,11 +64,7 @@ def test_newton_steps_converge_toward_mle():
         "parallel_monte_carlo_simulations_spark.operators.logreg",
         fromlist=["_ORACLE"],
     )._ORACLE
-    con = duckdb_connection(SF)
-    try:
-        row = con.execute(oracle_sql).fetchone()
-    finally:
-        con.close()
+    row = con.execute(oracle_sql).fetchone()
     assert abs(row[0] - b0_2) < 1e-3
     assert abs(row[1] - b1_2) < 1e-3
     # the fitted slope is finite and the mid-bucket probability is a

@@ -28,6 +28,7 @@ from parallel_monte_carlo_simulations_spark.functions.microunit import (
     guard_exact_bigint,
     rdiv_halfup_duck,
     rdiv_halfup_expr,
+    rdiv_halfup_spark,
 )
 
 
@@ -201,6 +202,13 @@ def test_spark_literal_den_fast_paths_match_mirror(spark):
                     den,
                     digits,
                 )
+    # Non-ASCII digit strings are not integer literals: they must take
+    # the general zero-guarded path instead of crashing in int() ('²')
+    # or being misread as a literal ('٣').
+    for den in ("²", "٣"):
+        assert rdiv_halfup_spark("num", den).startswith(
+            f"case when ({den}) = 0 then"
+        )
 
 
 def test_spark_nonneg_matches_mirror(spark):

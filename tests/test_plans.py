@@ -7,8 +7,6 @@ into a sort-merge shuffle)."""
 
 from __future__ import annotations
 
-import pytest
-
 from parallel_monte_carlo_simulations_spark.registry import load_all_queries
 
 SF = "/root/testdata/sf0.01"
@@ -440,89 +438,6 @@ def test_minhash_incremental_broadcasts_delta(spark):
     assert "CartesianProduct" not in plan
 
 
-def _tools_path():
-    import sys
-
-    repo = __file__.rsplit("/", 2)[0]
-    if repo not in sys.path:
-        sys.path.insert(0, repo)
-
-
-def _has_unbounded_generate_broadcast(spark, name) -> bool:
-    """True if the plan has a BroadcastExchange whose INPUT subtree
-    contains a Generate (explode) and no cardinality-bounding op
-    (keyless aggregate or limit) — i.e. the plan broadcasts a frame
-    whose cardinality still scales with the corpus while its static
-    size estimate cannot. The walker itself lives in
-    tools/audit_broadcast.py; this test pins the queries whose fixes
-    it produced."""
-    _tools_path()
-    from tools.audit_broadcast import unbounded_generate_broadcasts
-
-    return unbounded_generate_broadcasts(_plan(spark, name)) > 0
-
-
-def test_corpus_joins_never_broadcast_corpus(spark):
-    """Round-8 sf1.0 finding: Catalyst's static size estimate of a
-    post-explode frame stays anchored to the tiny scan it derives from
-    (the ~200x explode is invisible), so the planner auto-broadcasts
-    the CORPUS into joins — at 10x docs the build dies
-    (notEnoughMemoryToBuildAndBroadcastTable); at 100 TB the plan is a
-    guaranteed kill. Every corpus-sided join in the queries below pins
-    sort-merge (the round-8 registry-wide audit fixed 9 such hazards;
-    tools/audit_broadcast.py sweeps ALL registered plans per round and
-    its BOUNDED_OK whitelist documents the broadcasts that are bounded
-    by construction — query samples, fixed sketch/class/salt domains,
-    guarded vocabularies)."""
-    for name in [
-        # dedup family
-        "q_dedup_minhash_lsh",
-        "q_dedup_containment",
-        "q_dedup_simhash",
-        "q_dedup_simhash_recall_audit",
-        "q_dedup_semantic",
-        "q_dedup_semantic_adaptive",
-        "q_winnow_overlap_pairs",
-        "q_dedup_ngram_jaccard",
-        "q_dedup_substring_spans",
-        "q_dedup_minhash_error_eval",
-        # text / search vocab and postings joins
-        "q_text_tfidf_topterms",
-        "q_text_tfidf_cosine_pairs",
-        "q_text_bigram_backoff",
-        "q_search_phrase",
-        # spatial / interval candidate joins
-        "q_geo_grid_proximity_join",
-        "q_join_interval_overlap",
-    ]:
-        assert not _has_unbounded_generate_broadcast(spark, name), (
-            f"{name}: corpus-sized post-explode frame is broadcast"
-        )
-
-
-@pytest.mark.timeout_s(900)
-def test_registry_wide_broadcast_audit_clean(spark):
-    """Continuous form of tools/audit_broadcast.py (round-9): compile
-    EVERY registered plan and require (a) zero non-whitelisted
-    generate-broadcasts, (b) zero STALE whitelist entries — a plan
-    that shifted out from under its exemption would otherwise be
-    silently re-exempted if it ever shifts back — and (c) zero
-    plan-compilation errors. ~3-4 min: the cost of making whitelist
-    drift a test failure instead of a per-round artifact diff."""
-    _tools_path()
-    from tools.audit_broadcast import audit
-
-    out = audit(spark)
-    assert out["errors"] == {}, out["errors"]
-    assert out["not_whitelisted"] == [], (
-        f"unreviewed corpus-broadcast hazards: {out['not_whitelisted']}"
-    )
-    assert out["whitelist_unused"] == [], (
-        f"stale BOUNDED_OK entries (plan no longer flags): "
-        f"{out['whitelist_unused']}"
-    )
-
-
 def test_hybrid_rrf_topk_distributed_and_query_broadcast(spark):
     """Both retriever lists must cut with distributed top-k (no
     corpus-sized single-partition window), and the dense side must
@@ -548,87 +463,6 @@ def test_periodogram_frequency_dim_broadcast(spark):
     assert "partial_count" in plan
 
 
-# --------------------------------------------------------------------------
-# Round 11: global-ranked-window gate (the WindowExec twin of the
-# broadcast audit) + kernel-conversion pins.
-# --------------------------------------------------------------------------
-
-#: The round-10 verdict's weak family + the queries the round-11 sweep
-#: converted alongside them: each previously carried a Window whose
-#: partition spec was empty or a handful of values over a corpus-sized
-#: frame; all now run through operators/rankstats.py.
-CONVERTED_TO_RANK_KERNEL = [
-    "q_ks_two_sample",
-    "q_mann_whitney_u",
-    "q_wasserstein_two_sample",
-    "q_psi_drift",
-    "q_bootstrap_ci_mean",
-    "q_ml_lift_deciles",
-    "q_customer_rfm",
-    "q_window_cume_dist",
-    "q_abc_pareto",
-    "q_window_ntile",
-    "q_window_percent_rank",
-    "q_window_range_frame",
-    "q_gini_concentration",
-    "q_funnel_time_to_convert",
-    "q_interval_concurrency",
-    "q_gaps_islands_key_ranges",
-    "q_ml_conformal_interval",
-    "q_privacy_k_anonymity",
-    "q_privacy_pseudonymize",
-    "q_feat_quantile_binning",
-    "q_text_quality_calibration",
-    "q_dataset_interleave",
-    "q_sample_balanced_classes",
-    "q_sequence_packing",
-    "q_weighted_percentiles",
-    "q_mad_outliers",
-    "q_winsorized_means",
-    "q_roc_auc",
-    "q_spearman_corr",
-    # q_curation_token_budget is PARTIALLY converted (the corpus-sized
-    # boundary-bucket fill); its remaining windows run over the 3-dp
-    # quantized score rollup (<= 1001 rows) and stay whitelisted in
-    # tools/audit_windows.py, so it is exercised by the registry-wide
-    # gate below rather than this zero-window pin.
-]
-
-
-@pytest.mark.parametrize("name", CONVERTED_TO_RANK_KERNEL)
-def test_converted_queries_have_no_global_window(spark, name):
-    """Every converted query's plan must be free of corpus-over-one-
-    (or-K-)partition windows: all remaining Window nodes either
-    partition by the kernel's bucket column or consume a structurally
-    bounded rollup."""
-    _tools_path()
-    from tools.audit_windows import unbounded_global_windows
-
-    assert unbounded_global_windows(_plan(spark, name)) == 0, (
-        f"{name}: corpus-sized global/low-card window survived conversion"
-    )
-
-
-@pytest.mark.timeout_s(900)
-def test_registry_wide_window_audit_clean(spark):
-    """Continuous form of tools/audit_windows.py (round-11): compile
-    EVERY registered plan and require (a) zero non-whitelisted
-    global-ranked windows, (b) zero STALE whitelist entries, (c) zero
-    plan-compilation errors — same design as the broadcast gate above."""
-    _tools_path()
-    from tools.audit_windows import audit
-
-    out = audit(spark)
-    assert out["errors"] == {}, out["errors"]
-    assert out["not_whitelisted"] == [], (
-        f"unreviewed global-window hazards: {out['not_whitelisted']}"
-    )
-    assert out["whitelist_unused"] == [], (
-        f"stale BOUNDED_OK entries (plan no longer flags): "
-        f"{out['whitelist_unused']}"
-    )
-
-
 def test_registry_counts_agree():
     """OPERATORS.md's header count, the registry, and the driver
     contract surface must never drift apart (round-11 hygiene gate)."""
@@ -651,7 +485,7 @@ def test_registry_counts_agree():
 
 
 # --------------------------------------------------------------------------
-# Round 12: record-file + audit-artifact hygiene gates (r11 verdict #2/#3).
+# Round 12: record-file hygiene gate (r11 verdict #2).
 # --------------------------------------------------------------------------
 
 
@@ -729,24 +563,4 @@ def test_round_record_files_tracked():
     assert missing == [], (
         f"round-record files not git-tracked: {missing} — "
         "`git add` them in the same change that asserts their counts"
-    )
-
-
-@pytest.mark.parametrize(
-    "artifact", ["AUDIT_WINDOWS.json", "AUDIT_BROADCAST.json"]
-)
-def test_audit_artifacts_fresh(artifact):
-    """The committed audit artifacts must describe the CURRENT registry
-    population (r11 shipped AUDIT_WINDOWS.json at 457 of 459): their
-    n_queries stamp must equal the live registry count, else regenerate
-    with tools/audit_windows.py / tools/audit_broadcast.py."""
-    import json
-    import os
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    with open(os.path.join(repo, artifact)) as fh:
-        data = json.load(fh)
-    assert data["n_queries"] == len(SPECS), (
-        f"{artifact} audited {data['n_queries']} queries, registry has "
-        f"{len(SPECS)} — regenerate the artifact alongside registry changes"
     )

@@ -20,6 +20,10 @@ from parallel_monte_carlo_simulations_spark.operators.rankstats import (
     sql_ntile,
     with_range_bucket,
 )
+from parallel_monte_carlo_simulations_spark.plans.audit import (
+    formatted_plan,
+    unbounded_global_windows,
+)
 
 
 def _frame(spark, n=4000, n_distinct=37, seed=11):
@@ -217,11 +221,7 @@ def test_local_windows_are_bucket_partitioned(spark):
         cums={"c": F.lit(1)},
         n_buckets=16,
     )
-    plan = out._sc._jvm.PythonSQLUtils.explainString(
-        out._jdf.queryExecution(), "formatted"
-    )
-    from tools.audit_windows import unbounded_global_windows
-
+    plan = formatted_plan(out)
     assert unbounded_global_windows(plan) == 0, plan
 
 

@@ -23,21 +23,18 @@ def test_grid_proximity_equals_brute_force():
     """The grid/neighbourhood join must return exactly the brute-force
     O(n^2) pair set."""
     con = duckdb_connection(SF)
-    try:
-        brute = con.execute(
-            f"""
-            WITH pts AS ({_POINTS_SQL})
-            SELECT a.pid, b.pid,
-                   (a.lat-b.lat)*(a.lat-b.lat) + (a.lon-b.lon)*(a.lon-b.lon)
-            FROM pts a JOIN pts b ON a.pid < b.pid
-            WHERE (a.lat-b.lat)*(a.lat-b.lat) + (a.lon-b.lon)*(a.lon-b.lon)
-                  <= {RADIUS_MICRO * RADIUS_MICRO}
-            ORDER BY 1, 2
-            """
-        ).fetchall()
-        grid = con.execute(_QGRID_ORACLE).fetchall()
-    finally:
-        con.close()
+    brute = con.execute(
+        f"""
+        WITH pts AS ({_POINTS_SQL})
+        SELECT a.pid, b.pid,
+               (a.lat-b.lat)*(a.lat-b.lat) + (a.lon-b.lon)*(a.lon-b.lon)
+        FROM pts a JOIN pts b ON a.pid < b.pid
+        WHERE (a.lat-b.lat)*(a.lat-b.lat) + (a.lon-b.lon)*(a.lon-b.lon)
+              <= {RADIUS_MICRO * RADIUS_MICRO}
+        ORDER BY 1, 2
+        """
+    ).fetchall()
+    grid = con.execute(_QGRID_ORACLE).fetchall()
     assert brute == grid
     assert len(grid) > 0  # non-vacuous at sf0.001
 
@@ -53,33 +50,30 @@ def test_grid_knn_is_true_nn_when_within_ring():
     )
 
     con = duckdb_connection(SF)
-    try:
-        brute = dict(
-            (r[0], (r[1], r[2]))
-            for r in con.execute(
-                f"""
-                WITH cust AS ({_POINTS_SQL}),
-                supp AS (
-                  SELECT s_suppkey AS sid,
-                         CAST('0x' || substr(md5('lat:' || CAST(s_suppkey AS VARCHAR)), 1, 15) AS BIGINT) % 2000000 AS lat,
-                         CAST('0x' || substr(md5('lon:' || CAST(s_suppkey AS VARCHAR)), 1, 15) AS BIGINT) % 2000000 AS lon
-                  FROM supplier
-                ),
-                d AS (
-                  SELECT c.pid, s.sid,
-                         (c.lat-s.lat)*(c.lat-s.lat) + (c.lon-s.lon)*(c.lon-s.lon) AS dist_sq,
-                         ROW_NUMBER() OVER (PARTITION BY c.pid
-                                            ORDER BY (c.lat-s.lat)*(c.lat-s.lat)
-                                                   + (c.lon-s.lon)*(c.lon-s.lon), s.sid) AS rk
-                  FROM cust c CROSS JOIN supp s
-                )
-                SELECT pid, sid, dist_sq FROM d WHERE rk = 1
-                """
-            ).fetchall()
-        )
-        grid = con.execute(_QNN_ORACLE).fetchall()
-    finally:
-        con.close()
+    brute = dict(
+        (r[0], (r[1], r[2]))
+        for r in con.execute(
+            f"""
+            WITH cust AS ({_POINTS_SQL}),
+            supp AS (
+              SELECT s_suppkey AS sid,
+                     CAST('0x' || substr(md5('lat:' || CAST(s_suppkey AS VARCHAR)), 1, 15) AS BIGINT) % 2000000 AS lat,
+                     CAST('0x' || substr(md5('lon:' || CAST(s_suppkey AS VARCHAR)), 1, 15) AS BIGINT) % 2000000 AS lon
+              FROM supplier
+            ),
+            d AS (
+              SELECT c.pid, s.sid,
+                     (c.lat-s.lat)*(c.lat-s.lat) + (c.lon-s.lon)*(c.lon-s.lon) AS dist_sq,
+                     ROW_NUMBER() OVER (PARTITION BY c.pid
+                                        ORDER BY (c.lat-s.lat)*(c.lat-s.lat)
+                                               + (c.lon-s.lon)*(c.lon-s.lon), s.sid) AS rk
+              FROM cust c CROSS JOIN supp s
+            )
+            SELECT pid, sid, dist_sq FROM d WHERE rk = 1
+            """
+        ).fetchall()
+    )
+    grid = con.execute(_QNN_ORACLE).fetchall()
     assert len(grid) > 0
     # ring guarantee: any point within one cell side of its query cell is
     # inside the 3x3 ring, so if brute-NN distance < cell side^2 the grid
@@ -102,36 +96,33 @@ def test_skyline_equals_naive_dominance():
     )
 
     con = duckdb_connection(SF)
-    try:
-        naive = con.execute(
-            """
-            WITH pts AS (
-              SELECT o_orderkey,
-                     CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS price_cents,
-                     datediff('day', TIMESTAMP '2024-01-01', o_orderdate) AS day_no
-              FROM orders
-            ),
-            undominated AS (
-              SELECT * FROM pts p
-              WHERE NOT EXISTS (
-                SELECT 1 FROM pts q
-                WHERE q.price_cents >= p.price_cents AND q.day_no >= p.day_no
-                  AND (q.price_cents > p.price_cents OR q.day_no > p.day_no)
-              )
-            ),
-            dedup AS (
-              SELECT o_orderkey, price_cents, day_no,
-                     ROW_NUMBER() OVER (PARTITION BY price_cents, day_no
-                                        ORDER BY o_orderkey) AS rk
-              FROM undominated
-            )
-            SELECT o_orderkey, price_cents, day_no FROM dedup WHERE rk = 1
-            ORDER BY price_cents DESC, o_orderkey
-            """
-        ).fetchall()
-        fast = con.execute(_QSKY_ORACLE).fetchall()
-    finally:
-        con.close()
+    naive = con.execute(
+        """
+        WITH pts AS (
+          SELECT o_orderkey,
+                 CAST(ROUND(o_totalprice * 100, 0) AS BIGINT) AS price_cents,
+                 datediff('day', TIMESTAMP '2024-01-01', o_orderdate) AS day_no
+          FROM orders
+        ),
+        undominated AS (
+          SELECT * FROM pts p
+          WHERE NOT EXISTS (
+            SELECT 1 FROM pts q
+            WHERE q.price_cents >= p.price_cents AND q.day_no >= p.day_no
+              AND (q.price_cents > p.price_cents OR q.day_no > p.day_no)
+          )
+        ),
+        dedup AS (
+          SELECT o_orderkey, price_cents, day_no,
+                 ROW_NUMBER() OVER (PARTITION BY price_cents, day_no
+                                    ORDER BY o_orderkey) AS rk
+          FROM undominated
+        )
+        SELECT o_orderkey, price_cents, day_no FROM dedup WHERE rk = 1
+        ORDER BY price_cents DESC, o_orderkey
+        """
+    ).fetchall()
+    fast = con.execute(_QSKY_ORACLE).fetchall()
     assert naive == fast
     assert len(fast) > 0
 
@@ -145,29 +136,26 @@ def test_quadtree_partitions_every_point_once():
     )
 
     con = duckdb_connection(SF)
-    try:
-        leaves = con.execute(_QQUAD_ORACLE).fetchall()
-        n_total, = con.execute("SELECT COUNT(*) FROM customer").fetchone()
-        thresh = max(1, n_total // 16)
-        # parent counts at depth 1 and 2
-        c1 = dict(
-            ((x, y), n)
-            for x, y, n in con.execute(
-                f"""WITH pts AS ({_POINTS_SQL})
-                SELECT (lon*2)//2000000, (lat*2)//2000000, COUNT(*)
-                FROM pts GROUP BY 1, 2"""
-            ).fetchall()
-        )
-        c2 = dict(
-            ((x, y), n)
-            for x, y, n in con.execute(
-                f"""WITH pts AS ({_POINTS_SQL})
-                SELECT (lon*4)//2000000, (lat*4)//2000000, COUNT(*)
-                FROM pts GROUP BY 1, 2"""
-            ).fetchall()
-        )
-    finally:
-        con.close()
+    leaves = con.execute(_QQUAD_ORACLE).fetchall()
+    n_total, = con.execute("SELECT COUNT(*) FROM customer").fetchone()
+    thresh = max(1, n_total // 16)
+    # parent counts at depth 1 and 2
+    c1 = dict(
+        ((x, y), n)
+        for x, y, n in con.execute(
+            f"""WITH pts AS ({_POINTS_SQL})
+            SELECT (lon*2)//2000000, (lat*2)//2000000, COUNT(*)
+            FROM pts GROUP BY 1, 2"""
+        ).fetchall()
+    )
+    c2 = dict(
+        ((x, y), n)
+        for x, y, n in con.execute(
+            f"""WITH pts AS ({_POINTS_SQL})
+            SELECT (lon*4)//2000000, (lat*4)//2000000, COUNT(*)
+            FROM pts GROUP BY 1, 2"""
+        ).fetchall()
+    )
     assert sum(r[3] for r in leaves) == n_total
     for depth, cx, cy, n_points, _min_pid in leaves:
         if depth >= 2:
@@ -189,37 +177,34 @@ def test_sweepline_matches_pointwise_overlap_probe():
     )
 
     con = duckdb_connection(SF)
-    try:
-        reported = dict(
-            (h, p) for h, p in con.execute(_QSWEEP_ORACLE).fetchall()
+    reported = dict(
+        (h, p) for h, p in con.execute(_QSWEEP_ORACLE).fetchall()
+    )
+    merged_sql = f"""
+        WITH iv AS (
+          SELECT user_id, epoch_us(ts) AS s,
+                 epoch_us(ts) + {SESSION_US} AS e
+          FROM events
+        ),
+        flagged AS (
+          SELECT user_id, s, e,
+                 CASE WHEN s > MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+                      OR MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
+                             ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
+                      THEN 1 ELSE 0 END AS new_island
+          FROM iv
+        ),
+        islands AS (
+          SELECT user_id, s, e,
+                 SUM(new_island) OVER (PARTITION BY user_id ORDER BY s, e
+                     ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
+          FROM flagged
         )
-        merged_sql = f"""
-            WITH iv AS (
-              SELECT user_id, epoch_us(ts) AS s,
-                     epoch_us(ts) + {SESSION_US} AS e
-              FROM events
-            ),
-            flagged AS (
-              SELECT user_id, s, e,
-                     CASE WHEN s > MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-                          OR MAX(e) OVER (PARTITION BY user_id ORDER BY s, e
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-                          THEN 1 ELSE 0 END AS new_island
-              FROM iv
-            ),
-            islands AS (
-              SELECT user_id, s, e,
-                     SUM(new_island) OVER (PARTITION BY user_id ORDER BY s, e
-                         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS island
-              FROM flagged
-            )
-            SELECT user_id, island, MIN(s) AS s, MAX(e) AS e
-            FROM islands GROUP BY user_id, island
-        """
-        merged = con.execute(merged_sql).fetchall()
-    finally:
-        con.close()
+        SELECT user_id, island, MIN(s) AS s, MAX(e) AS e
+        FROM islands GROUP BY user_id, island
+    """
+    merged = con.execute(merged_sql).fetchall()
     # pointwise probe: concurrency at time t = #intervals with s <= t < e.
     # Probing every distinct sweep time (starts AND ends) is exhaustive:
     # with ends ordered before starts at equal t, the final running-sum
@@ -246,11 +231,8 @@ def test_boosting_mae_non_increasing():
     )
 
     con = duckdb_connection(SF)
-    try:
-        rows = con.execute(BOOST_ORACLE).fetchall()
-        n_total, = con.execute("SELECT COUNT(*) FROM lineitem").fetchone()
-    finally:
-        con.close()
+    rows = con.execute(BOOST_ORACLE).fetchall()
+    n_total, = con.execute("SELECT COUNT(*) FROM lineitem").fetchone()
     assert len(rows) == 2
     (r1, t1, nl1, _ll1, _lr1, mae1), (r2, t2, nl2, _ll2, _lr2, mae2) = rows
     assert (r1, r2) == (1, 2)
@@ -268,10 +250,7 @@ def test_neyman_allocation_properties():
     )
 
     con = duckdb_connection(SF)
-    try:
-        rows = con.execute(_QNEYMAN_ORACLE).fetchall()
-    finally:
-        con.close()
+    rows = con.execute(_QNEYMAN_ORACLE).fetchall()
     assert sum(r[3] for r in rows) == BUDGET
     weighted = sorted(rows, key=lambda r: r[1] * r[2], reverse=True)
     for (hi, lo) in zip(weighted, weighted[1:]):
