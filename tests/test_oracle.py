@@ -10,9 +10,15 @@ registry-wide before its values are compared:
   corpus-sized global window, unless the query is on the reviewed
   whitelist below — and a whitelisted query must still flag, so an
   exemption never outlives the plan shape it was granted for.
+
+The results of those checks are kept per query (``CHECKED``), so the
+registry-wide tests in test_plans.py and test_schema_discipline.py
+read this one build instead of making their own.
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
 
 import pytest
 from pyspark.sql import types as T
@@ -140,42 +146,82 @@ WINDOW_BOUNDED_OK: dict[str, str] = {
     ),
 }
 
+BROADCAST = "corpus-sized broadcast"
+WINDOW = "corpus-sized global window"
+
 _PLAN_WALKERS = (
-    ("corpus-sized broadcast", unbounded_generate_broadcasts, BROADCAST_BOUNDED_OK),
-    ("corpus-sized global window", unbounded_global_windows, WINDOW_BOUNDED_OK),
+    (BROADCAST, unbounded_generate_broadcasts, BROADCAST_BOUNDED_OK),
+    (WINDOW, unbounded_global_windows, WINDOW_BOUNDED_OK),
 )
 
 _NON_ATOMIC = (T.ArrayType, T.MapType, T.StructType)
 
 
-def _build_checked(spark, name):
-    """Build ``name`` once and run the registry-wide checks on it."""
-    df = SPECS[name].fn(spark, SF_DIR)
+@dataclass(frozen=True)
+class Checked:
+    """What the one build of a query showed: its non-atomic top-level
+    columns, and the count each plan walker flagged (keyed by kind)."""
 
-    # The driver's canonicalizer sorts rows through pandas, which cannot
-    # hash the lists/dicts a top-level array/map/struct column holds.
-    bad = [
+    non_atomic: tuple[str, ...]
+    flags: dict[str, int]
+
+
+#: name -> Checked, filled by the first build of each query this session.
+CHECKED: dict[str, Checked] = {}
+
+
+def _build(spark, name):
+    """Build ``name`` once and record what the registry-wide checks see."""
+    df = SPECS[name].fn(spark, SF_DIR)
+    non_atomic = tuple(
         f"{f.name}: {f.dataType.simpleString()}"
         for f in df.schema.fields
         if isinstance(f.dataType, _NON_ATOMIC)
-    ]
+    )
+    # Formatted explain only: audit() would fall back to the costly
+    # codegen explain on a frame that has not run yet.
+    plan = formatted_plan(df)
+    CHECKED[name] = Checked(
+        non_atomic, {kind: walker(plan) for kind, walker, _ in _PLAN_WALKERS}
+    )
+    return df
+
+
+def checked(spark, name) -> Checked:
+    """The check results of this session's build of ``name`` (building
+    it now if no test has yet)."""
+    if name not in CHECKED:
+        _build(spark, name)
+    return CHECKED[name]
+
+
+def assert_atomic(name, c: Checked):
+    # The driver's canonicalizer sorts rows through pandas, which cannot
+    # hash the lists/dicts a top-level array/map/struct column holds.
+    bad = list(c.non_atomic)
     assert not bad, (
         f"{name} returns non-atomic top-level column(s) {bad} — the "
         "driver's canonicalizer cannot hash them; flatten with "
         "array_join/to_json or explode before returning"
     )
 
-    # Formatted explain only: audit() would fall back to the costly
-    # codegen explain on a frame that has not run yet.
-    plan = formatted_plan(df)
-    for kind, walker, reviewed in _PLAN_WALKERS:
-        n = walker(plan)
+
+def assert_plan_reviewed(name, c: Checked):
+    for kind, _, reviewed in _PLAN_WALKERS:
+        n = c.flags[kind]
         assert n == 0 or name in reviewed, (
             f"{name}: {n} unreviewed {kind}(s) in the plan"
         )
         assert n > 0 or name not in reviewed, (
             f"{name}: stale whitelist entry — the plan has no {kind} any more"
         )
+
+
+def _build_checked(spark, name):
+    """Build ``name`` once and run the registry-wide checks on it."""
+    df = _build(spark, name)
+    assert_atomic(name, CHECKED[name])
+    assert_plan_reviewed(name, CHECKED[name])
     return df
 
 

@@ -7,7 +7,17 @@ into a sort-merge shuffle)."""
 
 from __future__ import annotations
 
+import pytest
+
 from parallel_monte_carlo_simulations_spark.registry import load_all_queries
+
+from .test_oracle import (
+    BROADCAST,
+    BROADCAST_BOUNDED_OK,
+    WINDOW,
+    WINDOW_BOUNDED_OK,
+    checked,
+)
 
 SF = "/root/testdata/sf0.01"
 SPECS = load_all_queries()
@@ -438,6 +448,67 @@ def test_minhash_incremental_broadcasts_delta(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_corpus_joins_never_broadcast_corpus(spark):
+    """Round-8 sf1.0 finding: Catalyst's static size estimate of a
+    post-explode frame stays anchored to the tiny scan it derives from
+    (the ~200x explode is invisible), so the planner auto-broadcasts
+    the CORPUS into joins — at 10x docs the build dies
+    (notEnoughMemoryToBuildAndBroadcastTable); at 100 TB the plan is a
+    guaranteed kill. Every corpus-sided join in the queries below pins
+    sort-merge. The broadcast walker in plans/audit.py runs on every
+    registered plan in tests/test_oracle.py; its BROADCAST_BOUNDED_OK
+    whitelist documents the broadcasts that are bounded by construction
+    — query samples, fixed sketch/class/salt domains, guarded
+    vocabularies."""
+    for name in [
+        # dedup family
+        "q_dedup_minhash_lsh",
+        "q_dedup_containment",
+        "q_dedup_simhash",
+        "q_dedup_simhash_recall_audit",
+        "q_dedup_semantic",
+        "q_dedup_semantic_adaptive",
+        "q_winnow_overlap_pairs",
+        "q_dedup_ngram_jaccard",
+        "q_dedup_substring_spans",
+        "q_dedup_minhash_error_eval",
+        # text / search vocab and postings joins
+        "q_text_tfidf_topterms",
+        "q_text_tfidf_cosine_pairs",
+        "q_text_bigram_backoff",
+        "q_search_phrase",
+        # spatial / interval candidate joins
+        "q_geo_grid_proximity_join",
+        "q_join_interval_overlap",
+    ]:
+        assert checked(spark, name).flags[BROADCAST] == 0, (
+            f"{name}: corpus-sized post-explode frame is broadcast"
+        )
+
+
+def _registry_wide_audit(spark, kind, reviewed):
+    """Every registered plan must flag ``kind`` iff it is whitelisted:
+    an unlisted flag is a hazard, a listed query that no longer flags
+    is a stale entry (a plan that shifted out from under its exemption
+    would otherwise be silently re-exempted if it ever shifted back)."""
+    flagged = {n for n in SPECS if checked(spark, n).flags[kind] > 0}
+    assert sorted(flagged - set(reviewed)) == [], (
+        f"unreviewed {kind} hazards: {sorted(flagged - set(reviewed))}"
+    )
+    assert sorted(set(reviewed) - flagged) == [], (
+        f"stale whitelist entries (plan no longer flags): "
+        f"{sorted(set(reviewed) - flagged)}"
+    )
+
+
+@pytest.mark.timeout_s(900)
+def test_registry_wide_broadcast_audit_clean(spark):
+    """Registry-wide broadcast gate over the sf0.01 builds that
+    tests/test_oracle.py checks query by query (it builds them here only
+    when run without that file)."""
+    _registry_wide_audit(spark, BROADCAST, BROADCAST_BOUNDED_OK)
+
+
 def test_hybrid_rrf_topk_distributed_and_query_broadcast(spark):
     """Both retriever lists must cut with distributed top-k (no
     corpus-sized single-partition window), and the dense side must
@@ -461,6 +532,71 @@ def test_periodogram_frequency_dim_broadcast(spark):
     ) >= 2
     # the series aggregate keys on the hour bucket: partial+final
     assert "partial_count" in plan
+
+
+# --------------------------------------------------------------------------
+# Round 11: global-ranked-window gate (the WindowExec twin of the
+# broadcast gate) + kernel-conversion pins.
+# --------------------------------------------------------------------------
+
+#: The round-10 verdict's weak family + the queries the round-11 sweep
+#: converted alongside them: each previously carried a Window whose
+#: partition spec was empty or a handful of values over a corpus-sized
+#: frame; all now run through operators/rankstats.py.
+CONVERTED_TO_RANK_KERNEL = [
+    "q_ks_two_sample",
+    "q_mann_whitney_u",
+    "q_wasserstein_two_sample",
+    "q_psi_drift",
+    "q_bootstrap_ci_mean",
+    "q_ml_lift_deciles",
+    "q_customer_rfm",
+    "q_window_cume_dist",
+    "q_abc_pareto",
+    "q_window_ntile",
+    "q_window_percent_rank",
+    "q_window_range_frame",
+    "q_gini_concentration",
+    "q_funnel_time_to_convert",
+    "q_interval_concurrency",
+    "q_gaps_islands_key_ranges",
+    "q_ml_conformal_interval",
+    "q_privacy_k_anonymity",
+    "q_privacy_pseudonymize",
+    "q_feat_quantile_binning",
+    "q_text_quality_calibration",
+    "q_dataset_interleave",
+    "q_sample_balanced_classes",
+    "q_sequence_packing",
+    "q_weighted_percentiles",
+    "q_mad_outliers",
+    "q_winsorized_means",
+    "q_roc_auc",
+    "q_spearman_corr",
+    # q_curation_token_budget is PARTIALLY converted (the corpus-sized
+    # boundary-bucket fill); its remaining windows run over the 3-dp
+    # quantized score rollup (<= 1001 rows) and stay on
+    # WINDOW_BOUNDED_OK in tests/test_oracle.py, so it is exercised by
+    # the registry-wide gate below rather than this zero-window pin.
+]
+
+
+@pytest.mark.parametrize("name", CONVERTED_TO_RANK_KERNEL)
+def test_converted_queries_have_no_global_window(spark, name):
+    """Every converted query's plan must be free of corpus-over-one-
+    (or-K-)partition windows: all remaining Window nodes either
+    partition by the kernel's bucket column or consume a structurally
+    bounded rollup."""
+    assert checked(spark, name).flags[WINDOW] == 0, (
+        f"{name}: corpus-sized global/low-card window survived conversion"
+    )
+
+
+@pytest.mark.timeout_s(900)
+def test_registry_wide_window_audit_clean(spark):
+    """Registry-wide global-window gate, same design as the broadcast
+    gate above."""
+    _registry_wide_audit(spark, WINDOW, WINDOW_BOUNDED_OK)
 
 
 def test_registry_counts_agree():

@@ -7,39 +7,20 @@ dicts — a top-level ``array<...>`` column crashes the driver with
 ``unhashable type: 'list'`` even though the values are correct
 (round 6: ``q_regexp_extract_all``). The builder-side comparator in
 ``tests/_compare.py`` tolerates lists (it tuples them), so nothing else
-in-repo catches the lapse. This sweep enforces the ``registry.py``
-column discipline for ALL registered queries: flatten arrays with
-``array_join`` or explode them before returning.
+in-repo catches the lapse. Flatten arrays with ``array_join`` or explode
+them before returning.
 
-Schema-only: the plan is built at sf0.001 but never executed, so the
-sweep stays cheap even over 340+ queries. Queries whose BUILD runs Spark
-jobs (iterative convergence loops) still only pay their build cost.
+No query is built here: each reads the schema check of the one sf0.01
+build that ``tests/test_oracle.py`` makes of it.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import types as T
 
-from parallel_monte_carlo_simulations_spark.registry import load_all_queries
-
-SF_DIR = "/root/testdata/sf0.001"
-
-SPECS = load_all_queries()
-
-_NON_ATOMIC = (T.ArrayType, T.MapType, T.StructType)
+from .test_oracle import SPECS, assert_atomic, checked
 
 
 @pytest.mark.parametrize("name", sorted(SPECS))
 def test_top_level_fields_atomic(spark, name):
-    df = SPECS[name].fn(spark, SF_DIR)
-    bad = [
-        f"{f.name}: {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if isinstance(f.dataType, _NON_ATOMIC)
-    ]
-    assert not bad, (
-        f"{name} returns non-atomic top-level column(s) {bad} — the "
-        "driver's canonicalizer cannot hash them; flatten with "
-        "array_join/to_json or explode before returning"
-    )
+    assert_atomic(name, checked(spark, name))
