@@ -22,31 +22,10 @@ from pyspark.sql import functions as F
 
 from ..functions.microunit import rdiv_halfup_duck, rdiv_halfup_expr
 from ..registry import register
+from ..tables import release
 from .minhash import q_dedup_minhash_lsh  # reuse the verified pair logic
 
 MAX_ROUNDS = 20
-
-
-def _release_local_checkpoint(df: DataFrame) -> None:
-    """Release the RDD blocks behind a localCheckpointed DataFrame.
-
-    ``Dataset.unpersist`` routes through the SQL cache manager, which
-    never sees localCheckpoint blocks (they are RDD-level persisted),
-    so ``df.unpersist()`` was a silent no-op here (round-9 advice) —
-    the r7 "per-round block release" never actually happened. The
-    blocks live on the internal RDD held by the checkpointed plan's
-    ``LogicalRDD`` leaf; reach it through the analyzed plan and
-    unpersist there. Best-effort by design: if the plan shape ever
-    changes, blocks fall back to LRU eviction (MEMORY_AND_DISK)
-    rather than failing the query. tests/test_hardening.py asserts
-    the release is real via getRDDStorageInfo.
-    """
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
-    except Exception:
-        pass
 
 
 def connected_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -> DataFrame:
@@ -101,7 +80,7 @@ def connected_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -
         # fails the query — acceptable for a bounded MAX_ROUNDS batch
         # job; a resumable variant would use reliable checkpoint() to a
         # cluster FS instead.
-        _release_local_checkpoint(labels)
+        release(labels)
         labels = new_labels
         if changed == 0:
             break
@@ -113,8 +92,7 @@ def connected_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -
         # block size (round-9 advice). Release the live checkpoint
         # blocks BEFORE raising — the error path is exactly when
         # MAX_ROUNDS of them have accumulated (round-10 advice).
-        _release_local_checkpoint(labels)
-        _release_local_checkpoint(edges)
+        release(labels, edges)
         raise RuntimeError(
             f"connected_components did not converge in {MAX_ROUNDS} "
             "hash-min rounds: a component's hop-diameter exceeds the "
@@ -124,7 +102,7 @@ def connected_components(pairs: DataFrame, a: str = "doc_a", b: str = "doc_b") -
         )
     # The returned plan reads only the final checkpointed labels; the
     # edge blocks are no longer reachable from it — release them too.
-    _release_local_checkpoint(edges)
+    release(edges)
     return labels.select(F.col("node").alias("doc_id"), F.col("lbl").alias("cluster_id"))
 
 

@@ -32,6 +32,7 @@ from ..functions.hashing import (
     sql_shingles,
 )
 from ..registry import register
+from ..tables import materialize
 from .ngram import shingle_sets
 
 N_HASHES = 8
@@ -165,22 +166,18 @@ def lsh_candidates(sig: DataFrame) -> DataFrame:
     tags=("dedup", "minhash", "lsh"),
 )
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The shingle frame feeds signatures AND the verify arrays — persist
-    # so the shingling window computes once. r13: materialize it EAGERLY
-    # (count is a cheap cached-scan) because consumers planned against an
-    # UNMATERIALIZED cache see UnknownPartitioning and re-exchange by
-    # doc_id, while the cached layout already IS hash(doc_id) from the
-    # shingling window — materialization makes the signature groupBy,
-    # the verify-hash distinct and the collect_list aggregate all
-    # zero-exchange (plan diff: 3 corpus Exchanges removed; guide §2.4).
-    sh = shingle_sets(spark, sf_dir).persist()
-    sh.count()
+    # The shingle frame feeds signatures AND the verify arrays — cache
+    # so the shingling window computes once. Its layout already IS
+    # hash(doc_id) from the shingling window, so the materialized cache
+    # makes the signature groupBy, the verify-hash distinct and the
+    # collect_list aggregate all zero-exchange (plan diff: 3 corpus
+    # Exchanges removed; guide §2.4).
+    sh = materialize(shingle_sets(spark, sf_dir))
     # r13: the banding self-join consumes the signature frame TWICE; an
     # unpersisted sig re-ran the full 8-hash min-aggregate (the dedup
     # path's heaviest scalar work) once per join side. One narrow row
-    # per doc — persist and materialize, halving the signature cost.
-    sig = minhash_signatures(sh).persist()
-    sig.count()
+    # per doc — caching it halves the signature cost.
+    sig = materialize(minhash_signatures(sh))
     cand = lsh_candidates(sig)
     arrs = shingle_hash_arrays(sh)
 
@@ -257,14 +254,10 @@ def q_dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     test harness); the INDEX side would be read from its persisted table
     in production — the join/broadcast shape is identical.
     """
-    # Same r13 treatment as the full build: eager materialization makes
-    # the cached hash(doc_id) layout visible to every consumer's plan,
-    # and the persisted signature frame feeds delta AND index band sides
-    # from one aggregate instead of two.
-    sh = shingle_sets(spark, sf_dir).persist()
-    sh.count()
-    sig = minhash_signatures(sh).persist()
-    sig.count()
+    # Same caching as the full build: the cached signature frame feeds
+    # delta AND index band sides from one aggregate instead of two.
+    sh = materialize(shingle_sets(spark, sf_dir))
+    sig = materialize(minhash_signatures(sh))
     band_cols = [
         F.concat_ws(
             ":",

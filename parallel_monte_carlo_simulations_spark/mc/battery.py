@@ -30,7 +30,7 @@ from collections.abc import Callable, Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from .models import BatteryConfigs, SimulationConfig, validate_simulation_configs
-from .seeds import fresh_master_seed
+from .seeds import fresh_master_seed, rng_for
 
 logger = logging.getLogger(__name__)
 
@@ -189,13 +189,7 @@ class MCBattery:
                     number_points, parameters, starting_point = cfg_by_model[model_id]
                     sim_ids, traces = [], []
                     for sim_id in range(sim_lo, sim_hi):
-                        rng = np.random.Generator(
-                            bit_gen_cls(
-                                np.random.SeedSequence(
-                                    [master_seed, model_id, sim_id]
-                                )
-                            )
-                        )
+                        rng = rng_for(bit_gen_cls, master_seed, model_id, sim_id)
                         trace = _call_model(
                             model, number_points, rng, parameters, starting_point
                         )

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import adaptive_partitions, table
+from ..tables import adaptive_partitions, materialize, table
 
 #: L2 regularization.
 LAMBDA = 10
@@ -106,38 +106,29 @@ LIMIT 50
 def q_recsys_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
     l = table(spark, sf_dir, "lineitem")
     o = table(spark, sf_dir, "orders")
-    ratings = (
+    # Referenced by v1, u1, v2, AND the final scoring join — cache once
+    # instead of recomputing the fact join 4x (measured 2.0 s -> 1.5 s
+    # steady-state at sf0.1, same JVM).
+    #
+    # r13 (guide §2.2/§2.4): cache in hash(item_id, P) layout. Three of
+    # the four consumers key on item_id (v1 agg, the u1 ratings-side
+    # join, the final scoring join), so those three corpus exchanges
+    # disappear; only the user_id-keyed half-steps still shuffle.
+    # Same-JVM A/B (OPTIMIZATION_r13.md, "q_recsys_als_rank1"; 4
+    # interleaved reps): median 6.89 s -> 3.45 s, min 5.68 -> 2.97 at
+    # sf0.1/local[32], 50-row output asserted cell-identical. P is
+    # byte-derived so the pin stays in the guide's partition-size band
+    # at any deployment scale.
+    ratings = materialize(
         l.join(o, l.l_orderkey == o.o_orderkey)
         .groupBy(
             F.col("o_custkey").alias("user_id"),
             F.col("l_partkey").alias("item_id"),
         )
-        .agg(F.sum(F.round(F.col("l_quantity"), 0).cast("long")).alias("r"))
-        # referenced by v1, u1, v2, AND the final scoring join — persist
-        # once instead of recomputing the fact join 4x (measured 2.0 s ->
-        # 1.5 s steady-state at sf0.1, same JVM). Deliberately NOT
-        # unpersisted here: the returned DataFrame is lazy, so releasing
-        # before the caller materializes would defeat the cache. Blocks
-        # are MEMORY_AND_DISK (LRU-evictable); harnesses that sweep many
-        # queries in one session release them via catalog.clearCache()
-        # after materializing (bench.py per-query, tests/conftest.py
-        # autouse fixture).
-        #
-        # r13 (guide §2.2/§2.4): cache in hash(item_id, P) layout and
-        # materialize EAGERLY. Three of the four consumers key on
-        # item_id (v1 agg, the u1 ratings-side join, the final scoring
-        # join), and a materialized cache exposes its partitioning to
-        # their plans, so those three corpus exchanges disappear; only
-        # the user_id-keyed half-steps still shuffle. Same-JVM A/B
-        # (OPTIMIZATION_r13.md, "q_recsys_als_rank1"; 4 interleaved
-        # reps): median 6.89 s -> 3.45 s, min 5.68 -> 2.97 at
-        # sf0.1/local[32], 50-row output asserted cell-identical. P is
-        # byte-derived so the pin stays
-        # in the guide's partition-size band at any deployment scale.
-        .repartition(adaptive_partitions(spark, sf_dir), "item_id")
-        .persist()
+        .agg(F.sum(F.round(F.col("l_quantity"), 0).cast("long")).alias("r")),
+        adaptive_partitions(spark, sf_dir),
+        "item_id",
     )
-    ratings.count()
 
     def _quant(col):
         return F.floor(col * QSCALE + F.lit(0.5)).cast("long")
@@ -149,7 +140,7 @@ def q_recsys_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
             / (F.lit(lam) + F.count("*").cast("double"))
         ).alias("v")
     )
-    u1 = (
+    u1 = materialize(  # u1 feeds both v2 and the final join
         ratings.join(v1, "item_id")
         .groupBy("user_id")
         .agg(
@@ -162,10 +153,7 @@ def q_recsys_als_rank1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("u")
         )
-        # u1 feeds both v2 and the final join
-        .persist()
     )
-    u1.count()  # r13: eager — consumers see the cached layout, not UnknownPartitioning
     v2 = (
         ratings.join(u1, "user_id")
         .groupBy("item_id")

@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from ..functions.hashing import hash60_seeded, sql_hash60_seeded
 from ..registry import register
-from ..tables import table
+from ..tables import materialize, table
 
 M_BITS = 65536  # power of two: n/M divisions are exact in both engines
 K_HASHES = 4
@@ -126,16 +126,14 @@ ORDER BY s.seg
 )
 def q_bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    probe = (
+    # r13 (guide §2.3/§2.4): probe feeds probe_pos, truth AND total —
+    # cache it so the orders scan + distinct runs once and every
+    # consumer reads the cached hash(key) layout.
+    probe = materialize(
         table(spark, sf_dir, "orders")
         .select(F.col("o_custkey").alias("key"))
         .distinct()
-        # r13 (guide §2.3/§2.4): probe feeds probe_pos, truth AND total —
-        # persist+materialize so the orders scan + distinct runs once and
-        # every consumer sees the cached hash(key) layout.
-        .persist()
     )
-    probe.count()
 
     # Build: DISTINCT (segment, position) — bounded at M rows per segment.
     build_pos = (

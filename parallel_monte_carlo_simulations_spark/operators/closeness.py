@@ -32,7 +32,7 @@ from ..functions.microunit import (
     rdiv_halfup_expr,
 )
 from ..registry import register
-from ..tables import adaptive_partitions, table
+from ..tables import adaptive_partitions, materialize, release, table
 from .graph import _PART_OFFSET
 
 K_SOURCES = 4  #: supplier node ids 1..K used as BFS sources
@@ -109,8 +109,7 @@ def q_graph_harmonic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
     )
     p = adaptive_partitions(spark, sf_dir)
-    edges = edges.repartition(p, "src").persist()
-    edges.count()  # r13: per-round expand joins see the cached hash(src, p)
+    edges = materialize(edges, p, "src")  # per-round expand joins read hash(src, p)
 
     # Eager localCheckpoint per round, NOT persist: ``known`` is
     # referenced twice per round (anti-join probe + carry union), so
@@ -120,8 +119,8 @@ def q_graph_harmonic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-contract session; bfs_hops survives only because its state
     # is 1/K the width). The checkpoint materializes each round's small
     # (src, node, dist) state and truncates the plan to a scan, keeping
-    # every round's optimizer input linear. clusters.py:33 documents
-    # the same pattern for the connected-components loop.
+    # every round's optimizer input linear. dedup/clusters.py uses the
+    # same pattern for the connected-components loop.
     known = (
         spark.createDataFrame(
             [(i, i, 0) for i in range(1, K_SOURCES + 1)],
@@ -150,7 +149,7 @@ def q_graph_harmonic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Final state is materialized by the checkpoint; the edge cache is
     # no longer reachable from the returned plan — release it so the
     # driver window's session carries no residue into later queries.
-    edges.unpersist()
+    release(edges)
 
     hw = F.expr(_HW_CASE)
     return (

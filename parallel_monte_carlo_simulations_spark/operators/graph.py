@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import adaptive_partitions, table
+from ..tables import adaptive_partitions, materialize, release, table
 
 DAMPING = 0.85
 N_ITERS = 10
@@ -143,26 +143,11 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gap buys back the zero-exchange per-iteration shape that matters
     # at scale.
     p = adaptive_partitions(spark, sf_dir)
-    edges_p = edges.repartition(p, "src").persist()
-    edges_p.count()
+    edges_p = materialize(edges, p, "src")
     outdeg = edges_p.groupBy("src").agg(F.count("*").alias("deg"))
-    # Eager materialization (r13): plans built against an unmaterialized
-    # cache see UnknownPartitioning and re-exchange both join inputs
-    # every round; once materialized the cached hash layout is visible
-    # and the per-round joins keep the designed zero-exchange shape.
-    edges_deg = (
-        edges_p.join(outdeg.hint("shuffle_hash"), "src")
-        .repartition(p, "src")
-        .persist()
-    )
-    nodes = (
-        outdeg.select(F.col("src").alias("node"))
-        .repartition(p, "node")
-        .persist()
-    )
-    edges_deg.count()
-    nodes.count()
-    edges_p.unpersist()
+    edges_deg = materialize(edges_p.join(outdeg.hint("shuffle_hash"), "src"), p, "src")
+    nodes = materialize(outdeg.select(F.col("src").alias("node")), p, "node")
+    release(edges_p)
 
     # shuffle_hash hints: the rank/contrib sides look broadcastable at
     # test SFs, but broadcasting an iteration state re-materializes its
@@ -282,10 +267,8 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
         a.join(b, (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")))
         .select(F.col("a.s").alias("u"), F.col("b.s").alias("v"))
         .distinct()
-        .repartition(p, "u", "v")
-        .persist()
     )
-    edges.count()  # r13: expose the cached hash(u, v) layout to consumers
+    edges = materialize(edges, p, "u", "v")
     deg = (
         edges.select(F.col("u").alias("node"))
         .unionByName(edges.select(F.col("v").alias("node")))
@@ -300,11 +283,15 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     u_first = F.struct(F.col("du.deg"), F.col("u")) < F.struct(
         F.col("dv.deg"), F.col("v")
     )
-    oriented = with_deg.select(
-        F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
-    ).repartition(p, "src").persist()
-    oriented.count()  # r13: both wedge self-join sides see hash(src, p)
+    # both wedge self-join sides read hash(src, p)
+    oriented = materialize(
+        with_deg.select(
+            F.when(u_first, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(u_first, F.col("v")).otherwise(F.col("u")).alias("dst"),
+        ),
+        p,
+        "src",
+    )
     o1, o2 = oriented.alias("o1"), oriented.alias("o2")
     # b < c by id, and the undirected edge set stores u < v by id, so the
     # closing probe is a plain (b, c) = (u, v) equi-join.
@@ -401,7 +388,7 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     default-1g driver heap during plan logging (observed in the plain
     driver-contract sweep). Eager localCheckpoint is the fix — it
     materializes each round's small (node, dist) state AND cuts the
-    plan to a scan (clusters.py:33 pattern); the edge cache is
+    plan to a scan (the dedup/clusters.py pattern); the edge cache is
     released after the loop since the checkpointed state no longer
     references it."""
     l = table(spark, sf_dir, "lineitem")
@@ -417,8 +404,7 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
     )
     p = adaptive_partitions(spark, sf_dir)
-    edges = edges.repartition(p, "src").persist()
-    edges.count()  # r13: per-round expand joins see the cached hash(src, p)
+    edges = materialize(edges, p, "src")  # per-round expand joins read hash(src, p)
 
     known = (
         spark.createDataFrame([(_BFS_SOURCE, 0)], "node long, dist int")
@@ -440,7 +426,7 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             known.hint("shuffle_hash"), "node", "left_anti"
         ).localCheckpoint(eager=True)
         known = known.unionByName(frontier).localCheckpoint(eager=True)
-    edges.unpersist()
+    release(edges)
     return known.select(
         F.col("node").cast("long").alias("node"),
         F.col("dist").cast("int").alias("dist"),

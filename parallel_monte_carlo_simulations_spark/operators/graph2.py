@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import adaptive_partitions, table
+from ..tables import adaptive_partitions, materialize, release, table
 from .graph import _PART_OFFSET
 
 _SSSP_SOURCE = 1
@@ -90,8 +90,7 @@ def q_graph_sssp_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("w", F.expr(_W))
     )
     p = adaptive_partitions(spark, sf_dir)
-    edges = edges.repartition(p, "src").persist()
-    edges.count()  # r13: per-round expand joins see the cached hash(src, p)
+    edges = materialize(edges, p, "src")  # per-round expand joins read hash(src, p)
 
     known = (
         spark.createDataFrame([(_SSSP_SOURCE, 0)], "node long, dist int")
@@ -192,25 +191,13 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # node set, both edge directions being materialized). The final
     # repartition on each consumer cache is what makes the layout
     # visible to the per-round joins (AQE-cached plans expose output
-    # partitioning only behind a trailing user repartition); eager
-    # materialization keeps them on the zero-exchange shape (§2.4).
+    # partitioning only behind a trailing user repartition).
     p = adaptive_partitions(spark, sf_dir)
-    edges_p = edges.repartition(p, "src").persist()
-    edges_p.count()
+    edges_p = materialize(edges, p, "src")
     outdeg = edges_p.groupBy("src").agg(F.count("*").alias("deg"))
-    edges_deg = (
-        edges_p.join(outdeg.hint("shuffle_hash"), "src")
-        .repartition(p, "src")
-        .persist()
-    )
-    nodes = (
-        outdeg.select(F.col("src").alias("node"))
-        .repartition(p, "node")
-        .persist()
-    )
-    edges_deg.count()
-    nodes.count()
-    edges_p.unpersist()
+    edges_deg = materialize(edges_p.join(outdeg.hint("shuffle_hash"), "src"), p, "src")
+    nodes = materialize(outdeg.select(F.col("src").alias("node")), p, "node")
+    release(edges_p)
     restart = F.when(
         F.col("node") == _PPR_SOURCE, F.lit(1 - _PPR_DAMPING)
     ).otherwise(F.lit(0.0))

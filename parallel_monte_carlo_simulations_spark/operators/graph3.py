@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import adaptive_partitions, table
+from ..tables import adaptive_partitions, materialize, table
 
 N_ROUNDS = 4
 _PART_OFFSET = 1_000_000
@@ -148,8 +148,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # vs ~30 s at sf0.01 in the plain driver-contract session. p tracks
     # cluster size, so the cached layout scales with the executor count.
     p = adaptive_partitions(spark, sf_dir)
-    edges = edges.repartition(p, "src").persist()
-    edges.count()  # r13: per-round semi-joins see the cached hash(src, p)
+    edges = materialize(edges, p, "src")  # per-round semi-joins read hash(src, p)
     alive = edges.select("src").distinct()
     rounds = [edges]
     for _ in range(N_ROUNDS):

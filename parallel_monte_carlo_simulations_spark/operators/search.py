@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import adaptive_partitions, table
+from ..tables import adaptive_partitions, materialize, table
 
 _POSTINGS_SQL = """
   SELECT d.doc_id, t.term, CAST(t.pos AS BIGINT) AS pos
@@ -89,19 +89,18 @@ LIMIT 20
 def q_search_phrase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §2.2/§2.4): the postings explode feeds FOUR join inputs
     # (both bigram-mining sides, the w1 probe, the hits extension side).
-    # Cache it once in hash(doc_id) layout and materialize eagerly:
-    # doc_id is a subset of every positional join's equi-keys, so a
-    # VISIBLE cached hash(doc_id, P) satisfies both sides' clustering and
-    # the self-joins keep only their Sorts (plan: corpus Exchanges under
-    # the joins collapse to cached scans; the explode computes once, not
-    # four times). P is byte-derived from the documents table so the
-    # cached partition size tracks the corpus at any scale.
-    p = (
-        _postings(spark, sf_dir)
-        .repartition(adaptive_partitions(spark, sf_dir, ("documents",)), "doc_id")
-        .persist()
+    # Cache it once in hash(doc_id) layout: doc_id is a subset of every
+    # positional join's equi-keys, so the cached hash(doc_id, P)
+    # satisfies both sides' clustering and the self-joins keep only
+    # their Sorts (plan: corpus Exchanges under the joins collapse to
+    # cached scans; the explode computes once, not four times). P is
+    # byte-derived from the documents table so the cached partition
+    # size tracks the corpus at any scale.
+    p = materialize(
+        _postings(spark, sf_dir),
+        adaptive_partitions(spark, sf_dir, ("documents",)),
+        "doc_id",
     )
-    p.count()
     p2 = p.select(
         F.col("doc_id").alias("doc_id_b"),
         F.col("term").alias("term_b"),

@@ -196,6 +196,32 @@ def unbounded_generate_broadcasts(plan: str) -> int:
     return n
 
 
+def consumer_exchanges(df: DataFrame) -> int:
+    """Count the shuffle Exchanges of ``df``'s physical plan that are not
+    under an ``InMemoryTableScan`` — the exchanges the query pays on top
+    of its caches, not the ones that built them.
+
+    A consumer of a cache that has not run yet sees unknown partitioning
+    and re-exchanges the cached rows; ``tables.materialize`` exists to
+    avoid that. Walks the JVM plan rather than the formatted text: Spark
+    prints the Final/Initial sections of a cache that has run at the
+    depth of its own sub-plan, so text indentation cannot tell where a
+    nested cache ends."""
+
+    def walk(node) -> int:
+        name = node.nodeName()
+        if name == "InMemoryTableScan":
+            return 0
+        if name == "AdaptiveSparkPlan":
+            return walk(node.executedPlan())
+        kids = node.children()
+        return int(name == "Exchange") + sum(
+            walk(kids.apply(i)) for i in range(kids.size())
+        )
+
+    return walk(df._jdf.queryExecution().executedPlan())
+
+
 #: Columns whose domain is a handful of values on ANY corpus size:
 #: partitioning a corpus-sized window by only these caps parallelism at
 #: the domain size — same straggler as an empty spec, just K-way.

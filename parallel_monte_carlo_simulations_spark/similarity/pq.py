@@ -46,7 +46,7 @@ from ..functions.vectors import (
     sql_dot,
 )
 from ..registry import register
-from ..tables import table
+from ..tables import release, table
 
 DIM = 64
 M_SUB = 16           # subspaces of DIM // M_SUB dims each
@@ -150,7 +150,7 @@ def pq_codebooks(corpus: DataFrame) -> DataFrame:
         # entire cascade once per downstream reference — measured as a
         # driver-heap OOM at sf0.1 before truncation.
         codebooks = codebooks.localCheckpoint(eager=True)
-    melted.unpersist()
+    release(melted)
     return codebooks
 
 

@@ -115,9 +115,10 @@ def adaptive_partitions(
       stay in the guide's 100 MB–1 GB band no matter how large the
       input grows, instead of dividing 100 TB by the executor count.
 
-    The count feeds explicit ``repartition(p, key)`` pins on persisted
-    iteration state, so it must be sane at plan time; AQE still
-    right-sizes the ENSURE_REQUIREMENTS exchanges around it.
+    The count feeds explicit ``repartition(p, key)`` pins on cached
+    iteration state (:func:`materialize`), so it must be sane at plan
+    time; AQE still right-sizes the ENSURE_REQUIREMENTS exchanges
+    around it.
     """
     b = input_file_bytes(sf_dir, *names)
     dp = spark.sparkContext.defaultParallelism
@@ -136,6 +137,52 @@ def partitions_for_bytes(
     if b <= 0:
         return dp
     return max(min(dp, -(-b // small_target)), -(-b // large_target))
+
+
+def materialize(df: DataFrame, p: int | None = None, *keys: str) -> DataFrame:
+    """Cache ``df`` (hash-pinned to ``repartition(p, *keys)`` when keys
+    are given) and run it now.
+
+    Eager, not lazy: under AQE a cached plan that has not run yet
+    reports unknown output partitioning, so every consumer planned
+    against it re-exchanges the cached rows — the pinned layout only
+    becomes visible once the cache is materialized
+    (OPTIMIZATION_r13.md). The count is a cheap scan of the fresh cache.
+
+    Caller contract: a query cannot release caches its returned lazy
+    plan still reads, so harnesses that run many queries in one session
+    drain them with ``spark.catalog.clearCache()`` after materializing
+    each result (bench.py, tests/conftest.py).
+    """
+    if keys:
+        df = df.repartition(p, *keys)
+    df = df.persist()
+    df.count()
+    return df
+
+
+def release(*dfs: DataFrame) -> None:
+    """Free the cached blocks behind persisted or ``localCheckpoint``
+    frames.
+
+    ``Dataset.unpersist`` routes through the SQL cache manager, which
+    never sees localCheckpoint blocks (they are RDD-level persisted), so
+    for those it is a silent no-op. Their blocks live on the internal
+    RDD held by the checkpointed plan's ``LogicalRDD`` leaf; reach it
+    through the analyzed plan and unpersist there. Best-effort by
+    design: if the plan shape ever changes, blocks fall back to LRU
+    eviction (MEMORY_AND_DISK) rather than failing the query.
+    tests/test_hardening.py asserts both releases are real.
+    """
+    for df in dfs:
+        try:
+            plan = df._jdf.queryExecution().analyzed()
+            if plan.getClass().getSimpleName() == "LogicalRDD":
+                plan.rdd().unpersist(False)
+                continue
+        except Exception:
+            pass
+        df.unpersist()
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

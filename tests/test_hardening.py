@@ -217,12 +217,10 @@ def test_connected_components_raises_on_nonconvergence(spark):
 
 def test_local_checkpoint_release_is_real(spark):
     # Dataset.unpersist routes through the SQL cache manager and never
-    # sees localCheckpoint blocks (RDD-level persisted) — the helper
-    # must release the actual block (round-9 advice: the r7 per-round
-    # release was a silent no-op).
-    from parallel_monte_carlo_simulations_spark.dedup.clusters import (
-        _release_local_checkpoint,
-    )
+    # sees localCheckpoint blocks (RDD-level persisted) — release() must
+    # free the actual block (round-9 advice: the r7 per-round release
+    # was a silent no-op), and still free a persisted frame's cache.
+    from parallel_monte_carlo_simulations_spark.tables import materialize, release
 
     sc = spark.sparkContext._jsc.sc()
     base = len(sc.getRDDStorageInfo())
@@ -230,5 +228,10 @@ def test_local_checkpoint_release_is_real(spark):
     assert len(sc.getRDDStorageInfo()) == base + 1
     df.unpersist()
     assert len(sc.getRDDStorageInfo()) == base + 1  # documented no-op
-    _release_local_checkpoint(df)
+    release(df)
+    assert len(sc.getRDDStorageInfo()) == base
+
+    cached = materialize(spark.range(10_000), 4, "id")
+    assert len(sc.getRDDStorageInfo()) == base + 1
+    release(cached)
     assert len(sc.getRDDStorageInfo()) == base

@@ -88,6 +88,40 @@ def test_determinism_across_runs_and_batch_sizes(spark, battery):
     assert sorted(map(str, a.collect())) == sorted(map(str, b.collect()))
 
 
+@pytest.mark.parametrize("rng", ["PCG64", "Philox", "SFC64", "MT19937"])
+def test_traces_match_rng_for_recompute(spark, rng):
+    # The shard loop must seed exactly as seeds.rng_for does: the
+    # benchmark's trace check and tests/test_hypothesis_mc.py recompute
+    # traces through it.
+    from parallel_monte_carlo_simulations_spark.mc.battery import _call_model
+    from parallel_monte_carlo_simulations_spark.mc.seeds import rng_for
+
+    cfgs = [
+        {"number_simulations": 60, "number_points": 12, "parameters": [0.3]},
+        {"number_simulations": 40, "number_points": 6, "starting_point": ["H"]},
+    ]
+    df = MCBattery({"rng": rng, "master_seed": 31}).simulate(
+        [coin, coin], cfgs, spark=spark
+    )
+    sampled = {(0, 0), (0, 17), (0, 59), (1, 0), (1, 39)}
+    got = {
+        (r.model_id, r.sim_id): list(r.trace)
+        for r in df.collect()
+        if (r.model_id, r.sim_id) in sampled
+    }
+    assert set(got) == sampled
+    for model_id, sim_id in sampled:
+        cfg = cfgs[model_id]
+        want = _call_model(
+            coin,
+            cfg["number_points"],
+            rng_for(RNG_MAPPING[rng], 31, model_id, sim_id),
+            cfg.get("parameters"),
+            cfg.get("starting_point"),
+        )
+        assert got[model_id, sim_id] == [str(p) for p in want]
+
+
 def test_float_traces(spark, battery):
     df = battery.simulate(
         [walk],

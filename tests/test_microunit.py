@@ -16,6 +16,7 @@ rounded division'. These tests pin BOTH halves of that contract:
 
 from __future__ import annotations
 
+import os
 from decimal import ROUND_HALF_UP, Decimal
 
 import duckdb
@@ -237,6 +238,29 @@ def test_spark_nonneg_matches_mirror(spark):
                 assert row.vdyn == _mirror(
                     row.num, row.num % 1_000_000 + int(den_sql), digits
                 )
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_nonneg_numerators_hold_on_testdata(sf):
+    """The data contract behind every ``nonneg=True`` numerator in
+    operators/relational.py: the summed columns are >= 0 (so are
+    1 - l_discount and 1 + l_tax). Data that breaks it must fail here,
+    not turn into silently wrong values."""
+    from tests.conftest import SF_MED
+
+    sf_dir = os.path.join(os.path.dirname(SF_MED), sf)
+    con = duckdb.connect()
+    qty, price, disc, tax, max_disc = con.execute(
+        "SELECT min(l_quantity), min(l_extendedprice), min(l_discount), "
+        f"min(l_tax), max(l_discount) FROM '{sf_dir}/lineitem.parquet'"
+    ).fetchone()
+    (total,) = con.execute(
+        f"SELECT min(o_totalprice) FROM '{sf_dir}/orders.parquet'"
+    ).fetchone()
+    mins = dict(l_quantity=qty, l_extendedprice=price, l_discount=disc,
+                l_tax=tax, o_totalprice=total)
+    assert all(v >= 0 for v in mins.values()), f"{sf}: negative minimum in {mins}"
+    assert max_disc <= 1, f"{sf}: l_discount up to {max_disc}"
 
 
 def test_spark_null_and_zero_den_propagation(spark):

@@ -24,6 +24,7 @@ import pytest
 from pyspark.sql import types as T
 
 from parallel_monte_carlo_simulations_spark.plans.audit import (
+    consumer_exchanges,
     formatted_plan,
     unbounded_generate_broadcasts,
     unbounded_global_windows,
@@ -160,10 +161,12 @@ _NON_ATOMIC = (T.ArrayType, T.MapType, T.StructType)
 @dataclass(frozen=True)
 class Checked:
     """What the one build of a query showed: its non-atomic top-level
-    columns, and the count each plan walker flagged (keyed by kind)."""
+    columns, the count each plan walker flagged (keyed by kind), and
+    the shuffle exchanges its plan adds on top of its caches."""
 
     non_atomic: tuple[str, ...]
     flags: dict[str, int]
+    exchanges: int
 
 
 #: name -> Checked, filled by the first build of each query this session.
@@ -182,7 +185,9 @@ def _build(spark, name):
     # codegen explain on a frame that has not run yet.
     plan = formatted_plan(df)
     CHECKED[name] = Checked(
-        non_atomic, {kind: walker(plan) for kind, walker, _ in _PLAN_WALKERS}
+        non_atomic,
+        {kind: walker(plan) for kind, walker, _ in _PLAN_WALKERS},
+        consumer_exchanges(df),
     )
     return df
 

@@ -448,6 +448,34 @@ def test_minhash_incremental_broadcasts_delta(spark):
     assert "CartesianProduct" not in plan
 
 
+#: Shuffle exchanges each query that caches through ``tables.materialize``
+#: adds on top of its caches (``plans.audit.consumer_exchanges`` at
+#: sf0.01/local[4]). A cache that has not run when the query is planned
+#: reports unknown partitioning and its consumers re-exchange it, so a
+#: ``materialize`` that stopped running the cache raises these counts.
+#: The BFS, harmonic, k-core and SSSP plans read only checkpointed or
+#: per-round state, so their counts do not depend on the cache running.
+CONSUMER_EXCHANGES = {
+    "q_bloom_join_prune": 10,
+    "q_dedup_minhash_incremental": 3,
+    "q_dedup_minhash_lsh": 5,
+    "q_graph_bfs_hops": 0,
+    "q_graph_harmonic_sampled": 2,
+    "q_graph_kcore": 0,
+    "q_graph_pagerank": 39,
+    "q_graph_ppr": 31,
+    "q_graph_sssp_weighted": 0,
+    "q_graph_triangles": 1,
+    "q_recsys_als_rank1": 2,
+    "q_search_phrase": 0,
+}
+
+
+@pytest.mark.parametrize("name", sorted(CONSUMER_EXCHANGES))
+def test_materialized_caches_spare_consumer_exchanges(spark, name):
+    assert checked(spark, name).exchanges == CONSUMER_EXCHANGES[name]
+
+
 def test_corpus_joins_never_broadcast_corpus(spark):
     """Round-8 sf1.0 finding: Catalyst's static size estimate of a
     post-explode frame stays anchored to the tiny scan it derives from

@@ -1,36 +1,55 @@
-"""Robustness sweep: every oracled query at sf0.1 (10x the driver's SF).
+"""Full-registry robustness sweep: every oracled query at one scale factor.
 
-The driver verifies at sf0.01; this sweep re-runs the full oracle
-comparison at sf0.1 to surface scale-dependent divergences — decimal
-overflow, ordering ties that only materialize with more data, window
-semantics that differ only on longer series.
+The oracle tests run at sf0.01; this sweep re-runs the full oracle
+comparison on a larger dataset (sf0.1, or the 10x-tiled .scale/sf1.0
+from tools/gen_sf1.py) to surface scale-dependent divergences —
+decimal overflow, ordering ties that only materialize with more data,
+window semantics that differ only on longer series.
 
 Hardening learned from the first attempt (which spilled 38 GB of DuckDB
 temp and died): a bounded DuckDB (memory_limit + temp dir under the
 repo), a per-query SIGALRM wall timeout, and incremental JSONL output
 so partial progress survives a crash. Re-running skips names already
-recorded (delete the output file for a fresh sweep).
+recorded (delete the output file for a fresh sweep). Each record's
+``sf`` comes from the directory name (``.../sf0.1`` -> 0.1).
 
-Usage: python tools/sweep_sf01.py [out.jsonl] [per-query-timeout-sec]
+Queries whose DuckDB replay is infeasible at sf1.0 (iterative graph
+SQL) are expected to time out there and are closed separately with
+independent pure-Python references (tests/test_graph_reference_sf01.py
+pattern).
+
+Usage: python tools/sweep.py SF_DIR [out.jsonl] [timeout-sec] [names...]
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
 import signal
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-sys.path.insert(
-    0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tests")
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
-SF_DIR = "/root/testdata/sf0.1"
-OUT = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.sweep_sf01.jsonl"
-TIMEOUT_S = int(sys.argv[2]) if len(sys.argv) > 2 else 300
-DUCK_MEM = "24GB"
+SF_DIR = sys.argv[1].rstrip("/")
+SF_NAME = os.path.basename(SF_DIR)
+SF = float(re.fullmatch(r"sf([\d.]+)", SF_NAME).group(1))
+OUT = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, f".sweep_{SF_NAME}.jsonl")
+TIMEOUT_S = int(sys.argv[3]) if len(sys.argv) > 3 else 600
+ONLY = set(sys.argv[4:])
+DUCK_MEM = os.environ.get("SWEEP_DUCK_MEM", "24GB")
+
+#: Optional horizontal split for wall-clock: SWEEP_SHARD="0/2" runs the
+#: even-indexed names, "1/2" the odd ones, each process with its own
+#: Spark session (SWEEP_CPUS cores) and DuckDB thread budget, writing
+#: its own OUT file (concatenate afterwards — the JSONL rows are
+#: self-describing).
+SHARD = os.environ.get("SWEEP_SHARD")
+CPUS = os.environ.get("SWEEP_CPUS")
+DUCK_THREADS = os.environ.get("SWEEP_DUCK_THREADS")
 
 
 class _Timeout(Exception):
@@ -44,24 +63,28 @@ def _alarm(_sig, _frm):
 def main() -> None:
     import duckdb
 
-    from _compare import _normalize  # noqa: F401 (import check)
-    from _compare import compare, duckdb_connection
+    from _compare import compare
     from parallel_monte_carlo_simulations_spark.registry import load_all_queries
     from parallel_monte_carlo_simulations_spark.session import get_spark
 
-    # Bound DuckDB globally for this process: every duckdb.connect() in
-    # _compare inherits the default config we set via the module-level
-    # patch below.
-    tmp = "/root/repo/.duck_tmp"
+    # Per-shard temp dir: two shards sharing one dir also share the
+    # spill cap, so one shard's spill starves the other (observed as
+    # spurious "failed to offload (55.8/55.8 GiB)" OOMs). The cap must
+    # also respect the BOX's free disk, not just DuckDB's default.
+    suffix = f"-{SHARD.replace('/', '_')}" if SHARD else ""
+    tmp = os.path.join(REPO, f".duck_tmp{suffix}")
     os.makedirs(tmp, exist_ok=True)
+    spill_cap = os.environ.get("SWEEP_DUCK_SPILL", "60GB")
 
     orig_connect = duckdb.connect
 
     def bounded_connect(*a, **kw):
         con = orig_connect(*a, **kw)
         con.execute(f"SET memory_limit='{DUCK_MEM}'")
+        if DUCK_THREADS:
+            con.execute(f"SET threads={int(DUCK_THREADS)}")
         con.execute(f"SET temp_directory='{tmp}'")
-        con.execute("SET max_temp_directory_size='60GB'")
+        con.execute(f"SET max_temp_directory_size='{spill_cap}'")
         return con
 
     duckdb.connect = bounded_connect
@@ -75,19 +98,32 @@ def main() -> None:
                 except Exception:
                     pass
 
-    spark = get_spark()
+    if CPUS:
+        spark = get_spark(
+            app_name=f"sweep-{SF_NAME}-shard{SHARD or 0}".replace("/", "-"),
+            master=f"local[{int(CPUS)}]",
+            shuffle_partitions=int(CPUS),
+            extra_conf={"spark.ui.enabled": "false"},
+        )
+    else:
+        spark = get_spark()
     signal.signal(signal.SIGALRM, _alarm)
 
     specs = load_all_queries()
     names = sorted(n for n, s in specs.items() if s.oracle is not None)
-    print(f"sweep: {len(names)} oracled queries, {len(done)} already done")
+    if ONLY:
+        names = [n for n in names if n in ONLY]
+    if SHARD:
+        i, n = (int(x) for x in SHARD.split("/"))
+        names = [nm for j, nm in enumerate(names) if j % n == i]
+    print(f"{SF_NAME} sweep: {len(names)} oracled queries, {len(done)} already done")
 
     for i, name in enumerate(names):
         if name in done:
             continue
         spec = specs[name]
         t0 = time.time()
-        rec: dict = {"name": name, "sf": 0.1}
+        rec: dict = {"name": name, "sf": SF}
         signal.alarm(TIMEOUT_S)
         try:
             df = spec.fn(spark, SF_DIR)
@@ -119,7 +155,6 @@ def main() -> None:
         status = {True: "ok", False: "MISMATCH", None: "ERR"}[rec["ok"]]
         print(f"[{i + 1}/{len(names)}] {name}: {status} ({rec['sec']}s)", flush=True)
 
-    # Summary
     results = [json.loads(line) for line in open(OUT)]
     bad = [r for r in results if r["ok"] is False]
     err = [r for r in results if r["ok"] is None]
