@@ -1,6 +1,7 @@
 #!/usr/bin/env python
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+$SPARK_GRAFT_CPUS defaults to the visible core count.
 
 Prints ONE JSON line:
   {"metric": "...", "value": total_sec, "unit": "sec",
@@ -34,7 +35,8 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CORES = len(os.sched_getaffinity(0))
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(CORES))
 
 #: The round-4 CPU-calibration constant (mean of start/end probes in
 #: BENCH_r04.json). ``value_normalized`` scales this run's seconds by
@@ -405,8 +407,11 @@ def _median(xs: list[float]) -> float:
 #: SCALE_NATURAL5 already used. The calibration probe stays as the
 #: secondary gate (it catches CPU-speed drift; load1 catches core
 #: contention — r11's mc_demo +34% phantom regression started at
-#: load1 16.8 with a stable calibration).
-LOAD_QUIET = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_QUIET", "2.0"))
+#: load1 16.8 with a stable calibration). The default, 2.0 on 32 cores,
+#: scales with the visible core count.
+LOAD_QUIET = float(
+    os.environ.get("SPARK_GRAFT_BENCH_LOAD_QUIET", CORES / 16)
+)
 LOAD_WAIT_SEC = float(os.environ.get("SPARK_GRAFT_BENCH_LOAD_WAIT_SEC", "180"))
 
 

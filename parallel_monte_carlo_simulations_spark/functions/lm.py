@@ -9,11 +9,11 @@ This is the first stage of the classic quality-filter cascade (unigram
 -> KenLM-style n-gram -> model-based), and the only one whose math is
 fully SQL-expressible, so it is hash-verified cross-engine.
 
-Scale shape: one token explode (narrow), one tiny vocabulary aggregate
-(broadcast back), one per-doc aggregate — a single shuffle over tokens
-at any corpus size. Ranking uses the ROUNDED score so the top-N cut is
-reproducible across engines regardless of last-ulp libm differences in
-``log10``.
+Scale shape: one token explode (narrow), one vocabulary aggregate
+joined back sort-merge on the token (the vocabulary grows with the
+corpus), one broadcast scalar total, one per-doc aggregate. Ranking
+uses the ROUNDED score so the top-N cut is reproducible across engines
+regardless of last-ulp libm differences in ``log10``.
 """
 
 from __future__ import annotations
@@ -72,8 +72,11 @@ def q_text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c"))
     tot = toks.agg(F.count(F.lit(1)).alias("t"))
+    # freq is vocabulary-sized: it grows with the corpus (Heaps' law)
+    # and a post-explode frame's static estimate hides that — pin
+    # sort-merge; the scalar total stays a broadcast.
     scored = (
-        toks.join(F.broadcast(freq), "tok")
+        toks.join(freq.hint("merge"), "tok")
         .crossJoin(F.broadcast(tot))
         .groupBy("doc_id")
         .agg(

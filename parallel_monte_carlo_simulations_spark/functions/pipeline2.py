@@ -15,8 +15,9 @@ ONE oracle-checked query.
 
 Proves the text, dedup, similarity, and sharding subsystems compose in
 one Spark job: scan -> scalar hashing (no shuffle) -> centroid agg
-(skinny shuffle) -> window pack (single ordered pass over the bounded
-curated set) -> final groupBy. The oracle recomposes identical logic.
+(skinny shuffle) -> running-sum pack over doc order (the range-bucketed
+rank kernel of operators/rankstats.py, no global window) -> final
+groupBy. The oracle recomposes identical logic.
 """
 
 from __future__ import annotations
@@ -137,14 +138,21 @@ def q_pipeline_pretraining_shards(spark: SparkSession, sf_dir: str) -> DataFrame
         (F.floor((cosine(as_double(F.col("embedding")), F.col("cemb"))) * 1e6 + 0.5) / 1e6).alias("cos_c"),
     )
     kept = gated.where(F.col("cos_c") >= MIN_COS)
-    w = Window.orderBy("doc_id").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    packed = kept.select(
+    # the running token sum over doc order spans the whole curated
+    # corpus: the range-bucketed kernel computes it without a global
+    # window (doc_id is unique, so the ROWS frame is exact)
+    from ..operators.rankstats import bucketed_running
+
+    packed = bucketed_running(
+        kept,
+        axis="doc_id",
+        order=[F.col("doc_id").asc()],
+        cums={"cum_tokens": F.col("n_tokens")},
+    ).select(
         "doc_id",
         "n_tokens",
         (
-            (F.sum("n_tokens").over(w) - F.col("n_tokens"))
+            (F.col("cum_tokens") - F.col("n_tokens"))
             / PACK_TOKENS
         )
         .cast("long")

@@ -472,8 +472,9 @@ def q_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties), anchored at (r=0, p=1). Each trapezoid term is computed from
     exact integer (pos_cum, n_cum, n1) in identical double ops on both
     engines, rounded to 12 dp and summed as DECIMAL so cross-group
-    addition order is irrelevant. Window input is distinct-score-sized
-    per segment (the q_roc_auc scale shape)."""
+    addition order is irrelevant. The running sums over the
+    distinct-score groups (corpus-sized per segment) go through the
+    range-bucketed rank kernel, as in q_roc_auc."""
     o = table(spark, sf_dir, "orders")
     scored = o.select(
         F.col("o_orderpriority").alias("segment"),
@@ -488,34 +489,31 @@ def q_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("pos").cast("long").alias("n1"),
         F.sum("cnt").cast("long").alias("n"),
     )
-    w = (
-        Window.partitionBy("segment")
-        .orderBy(F.desc("score"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
+    from .rankstats import bucketed_running
+
     cum = (
-        grp.join(tot, "segment")
-        .select(
-            "segment",
-            "n1",
-            "n",
-            "score",
-            F.sum("cnt").over(w).alias("n_cum"),
-            F.sum("pos").over(w).alias("pos_cum"),
+        bucketed_running(
+            grp.join(tot, "segment"),
+            axis=-F.col("score"),
+            order=[F.desc("score")],
+            cums={"n_cum": F.col("cnt"), "pos_cum": F.col("pos")},
+            partition_by=("segment",),
         )
         .filter(F.col("n1") > 0)
     )
-    r = F.col("pos_cum").cast("double") / F.col("n1")
-    p = F.col("pos_cum").cast("double") / F.col("n_cum")
-    w2 = Window.partitionBy("segment").orderBy("n_cum")
+    # the previous curve point is the running sums before this score
+    # group: (pos_cum - pos, n_cum - cnt), or the (0, 1) anchor
+    pos0, n0 = F.col("pos_cum") - F.col("pos"), F.col("n_cum") - F.col("cnt")
     pts = cum.select(
         "segment",
         "n1",
         "n",
-        r.alias("r"),
-        p.alias("p"),
-        F.coalesce(F.lag(r).over(w2), F.lit(0.0)).alias("r0"),
-        F.coalesce(F.lag(p).over(w2), F.lit(1.0)).alias("p0"),
+        (F.col("pos_cum").cast("double") / F.col("n1")).alias("r"),
+        (F.col("pos_cum").cast("double") / F.col("n_cum")).alias("p"),
+        (pos0.cast("double") / F.col("n1")).alias("r0"),
+        F.when(n0 == 0, F.lit(1.0))
+        .otherwise(pos0.cast("double") / n0)
+        .alias("p0"),
     )
     terms = pts.select(
         "segment",

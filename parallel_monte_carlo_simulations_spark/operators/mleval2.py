@@ -217,9 +217,15 @@ def q_ml_lift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "pos",
         sql_ntile(F.col("rank"), F.col("n_all"), 10).alias("decile"),
     )
-    per = tiled.groupBy("decile").agg(
-        F.count("*").cast("long").alias("n"),
-        F.sum("pos").cast("long").alias("n_pos"),
+    # sql_ntile yields deciles 1..10: the limit states that bound in the
+    # plan, so the cumulative window below reads a capped frame.
+    per = (
+        tiled.groupBy("decile")
+        .agg(
+            F.count("*").cast("long").alias("n"),
+            F.sum("pos").cast("long").alias("n_pos"),
+        )
+        .limit(10)
     )
     tot = per.agg(
         F.sum("n").cast("long").alias("nt"),

@@ -41,9 +41,10 @@ old global window, no worse; value skew concentrates buckets exactly as
 it would concentrate any range partitioner.
 
 The plan signature — an Aggregate keyed on ``__rsbucket`` under the
-offsets window — is what ``plans.audit.unbounded_global_windows``
-recognizes as bounded, the same contract the broadcast walker has with
-keyless aggregates.
+offsets window — is a bounding node of the plan-tree walk in
+``plans.audit.unbounded_global_windows``: the window passes as long as
+every path from it down to a scan crosses such a rollup, as a broadcast
+passes when every path to its Generate crosses a keyless aggregate.
 """
 
 from __future__ import annotations

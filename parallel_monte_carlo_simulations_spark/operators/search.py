@@ -204,8 +204,10 @@ def q_search_boolean_and(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "term_b")
         .distinct()
     )
+    # both sides are posting lists (post-explode, bogus-small static
+    # estimate) — pin sort-merge on the intersection.
     return (
-        docs1.join(docs2, "doc_id")
+        docs1.join(docs2.hint("merge"), "doc_id")
         .select("doc_id", "term_a", "term_b")
         .orderBy("doc_id")
         .limit(50)
@@ -275,9 +277,11 @@ def q_search_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     pb = p.join(F.broadcast(t2), p.term == F.col("term_b")).select(
         F.col("doc_id").alias("doc_b"), F.col("pos").alias("pos_b"), "term_b"
     )
+    # pb is a posting list (post-explode, bogus-small static estimate)
+    # — pin sort-merge on the doc_id band join.
     hits = (
         pa.join(
-            pb,
+            pb.hint("merge"),
             (F.col("doc_b") == F.col("doc_id"))
             & F.col("pos_b").between(F.col("pos_a") - 3, F.col("pos_a") + 3)
             & (F.col("pos_b") != F.col("pos_a")),
@@ -444,11 +448,13 @@ def q_text_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("dot")
         )
     )
+    # norms is per-doc (corpus-sized) behind the same bogus post-explode
+    # estimate — pin sort-merge on both norm joins.
     na = norms.select(F.col("doc_id").alias("doc_a"), F.col("n2").alias("na2"))
     nb = norms.select(F.col("doc_id").alias("doc_b"), F.col("n2").alias("nb2"))
     return (
-        dots.join(na, "doc_a")
-        .join(nb, "doc_b")
+        dots.join(na.hint("merge"), "doc_a")
+        .join(nb.hint("merge"), "doc_b")
         .select(
             "doc_a",
             "doc_b",

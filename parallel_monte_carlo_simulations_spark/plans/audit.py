@@ -17,6 +17,7 @@ pipelines:
 from __future__ import annotations
 
 import re
+from collections.abc import Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
@@ -137,90 +138,9 @@ def assert_scale_safe(
 
 
 # --------------------------------------------------------------------------
-# Scale-hazard walkers over a formatted plan string. Pure functions of
-# the text, so one explain serves both; tests/test_oracle.py applies
-# them to every registered query against reviewed whitelists.
+# Scale-hazard walkers over the JVM physical plan tree; tests/test_oracle.py
+# applies them to every registered query against reviewed whitelists.
 # --------------------------------------------------------------------------
-
-_BROADCAST_BOUNDING = re.compile(r"GlobalLimit|TakeOrderedAndProject|CollectLimit")
-_AGG = re.compile(r"(?:Object|Sort)?(?:Hash)?Aggregate \((\d+)\)")
-_KEYLESS = re.compile(
-    r"\((\d+)\) (?:Object|Sort)?(?:Hash)?Aggregate[^\n]*\n"
-    r"(?:[^\n]*\n)*?Keys(?: \[\d+\])?: \[\]"
-)
-
-
-def _split_plan(plan: str) -> tuple[list[str], str]:
-    """(tree lines, detail section) of a formatted plan."""
-    parts = plan.split("\n\n", 1)
-    return parts[0].splitlines(), parts[1] if len(parts) > 1 else ""
-
-
-def _indent(line: str) -> int:
-    return len(line) - len(line.lstrip(" :+-"))
-
-
-def unbounded_generate_broadcasts(plan: str) -> int:
-    """Count BroadcastExchanges whose input subtree contains a Generate
-    and no cardinality-bounding op (keyless aggregate or limit).
-
-    Catalyst's static size estimate of a post-explode frame stays
-    anchored to the tiny scan it derives from — the row multiplication
-    of a Generate is invisible — so the planner happily auto-broadcasts
-    frames whose true cardinality scales with the corpus. At 10x docs
-    the build dies (notEnoughMemoryToBuildAndBroadcastTable); at 100 TB
-    the plan is a guaranteed job kill. The fix is ``.hint("merge")`` on
-    the corpus-sided join (see dedup/minhash.py) or bounding the frame.
-    """
-    lines, detail = _split_plan(plan)
-    global_aggs = {m.group(1) for m in _KEYLESS.finditer(detail)}
-    n = 0
-    for i, line in enumerate(lines):
-        if "BroadcastExchange" not in line:
-            continue
-        indent = _indent(line)
-        sub, bounded = [], False
-        for below in lines[i + 1 :]:
-            if _indent(below) <= indent:
-                break
-            if _BROADCAST_BOUNDING.search(below):
-                bounded = True
-                break
-            agg = _AGG.search(below)
-            if agg and agg.group(1) in global_aggs:
-                bounded = True
-                break
-            sub.append(below)
-        if not bounded and any("Generate" in x for x in sub):
-            n += 1
-    return n
-
-
-def consumer_exchanges(df: DataFrame) -> int:
-    """Count the shuffle Exchanges of ``df``'s physical plan that are not
-    under an ``InMemoryTableScan`` — the exchanges the query pays on top
-    of its caches, not the ones that built them.
-
-    A consumer of a cache that has not run yet sees unknown partitioning
-    and re-exchanges the cached rows; ``tables.materialize`` exists to
-    avoid that. Walks the JVM plan rather than the formatted text: Spark
-    prints the Final/Initial sections of a cache that has run at the
-    depth of its own sub-plan, so text indentation cannot tell where a
-    nested cache ends."""
-
-    def walk(node) -> int:
-        name = node.nodeName()
-        if name == "InMemoryTableScan":
-            return 0
-        if name == "AdaptiveSparkPlan":
-            return walk(node.executedPlan())
-        kids = node.children()
-        return int(name == "Exchange") + sum(
-            walk(kids.apply(i)) for i in range(kids.size())
-        )
-
-    return walk(df._jdf.queryExecution().executedPlan())
-
 
 #: Columns whose domain is a handful of values on ANY corpus size:
 #: partitioning a corpus-sized window by only these caps parallelism at
@@ -244,131 +164,169 @@ LOW_CARD_COLS = frozenset({
 #: values, enforced by least(n_buckets-1, ...) in with_range_bucket).
 BOUNDED_KEY_NAMES = frozenset({"__rsbucket"})
 
-_WINDOW_BOUNDING = re.compile(
-    r"GlobalLimit|TakeOrderedAndProject|CollectLimit|WindowGroupLimit"
-)
-_TREE_NODE = re.compile(r"(\w+(?:GroupLimit|InPandas)?) \((\d+)\)")
+_ROW_CUTS = frozenset({"GlobalLimit", "TakeOrderedAndProject", "CollectLimit"})
+_AGGREGATES = frozenset({"HashAggregate", "ObjectHashAggregate", "SortAggregate"})
 
 
-def _split_top_level_brackets(s: str) -> list[str]:
-    """Top-level ``[...]`` groups of a detail Arguments line."""
-    out, depth, cur = [], 0, []
-    for ch in s:
-        if ch == "[":
-            depth += 1
-            if depth == 1:
-                cur = []
-                continue
-        elif ch == "]":
-            depth -= 1
-            if depth == 0:
-                out.append("".join(cur))
-                continue
-        if depth >= 1:
-            cur.append(ch)
-    return out
+@dataclass(eq=False)
+class _Node:
+    """One physical operator: its name, its key names with ``#<id>``
+    stripped (an aggregate's grouping keys, a window's partition spec;
+    empty for every other operator) and its inputs."""
+
+    name: str
+    keys: frozenset[str]
+    children: list[_Node]
 
 
-def _detail_blocks(detail: str) -> dict[str, str]:
-    """node id -> its detail block text."""
-    blocks: dict[str, str] = {}
-    cur_id = None
-    for line in detail.splitlines():
-        m = re.match(r"^\((\d+)\) (\w+)", line)
-        if m:
-            cur_id = m.group(1)
-            blocks[cur_id] = line + "\n"
-        elif cur_id is not None:
-            blocks[cur_id] += line + "\n"
-    return blocks
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
 
 
-def _window_partition_cols(block: str) -> list[str] | None:
-    """Partition columns of a Window node's detail block; [] = global.
-
-    The Arguments line is ``[exprs], [partition], [order]`` — or just
-    ``[exprs], [order]`` when the partition spec is empty (order items
-    carry ASC/DESC markers, partition items don't)."""
-    m = re.search(r"^Arguments: (.*)$", block, re.M)
-    if not m:
-        return None
-    lists = _split_top_level_brackets(m.group(1))
-    if len(lists) >= 3:
-        part = lists[1]
-    elif len(lists) == 2:
-        part = "" if (" ASC" in lists[1] or " DESC" in lists[1]) else lists[1]
-    else:
-        return None
-    return [
-        re.sub(r"#\d+\w*", "", c.strip())
-        for c in part.split(",")
-        if c.strip()
-    ]
+def _key_names(exprs) -> frozenset[str]:
+    return frozenset(re.sub(r"#\d+\w*", "", e.toString()) for e in _seq(exprs))
 
 
-def _subtree_bounded(sub_lines: list[str], blocks: dict[str, str]) -> bool:
-    """True when a row-bounding node caps the window's input. A
-    ``Generate`` (explode) encountered on the walk DOWN from the window
-    re-expands whatever a deeper bound capped, so any bounding marker
-    found after a Generate no longer counts (the tree prints
-    output-to-input: lines above consume lines below)."""
-    generated = False
-    for line in sub_lines:
-        if "Generate" in line:
-            generated = True
+def _plan_tree(df: DataFrame) -> _Node:
+    """``df``'s physical plan with every wrapper resolved to the plan it
+    runs: an AQE plan to its current plan, a query stage (a cache that
+    has run holds Spark 4.1 ``ResultQueryStage``s) to its stage plan, a
+    reused exchange to that exchange, and an ``InMemoryTableScan`` to the
+    cached plan. Those last three are where a plan reaches one JVM node
+    twice; they are shared by JVM identity, so a cache that every
+    unrolled iteration reads is converted, and walked, once."""
+    identity = df._sc._jvm.System.identityHashCode
+    seen: dict[int, tuple] = {}
+
+    def shared(j) -> _Node:
+        key = identity(j)
+        if key not in seen or not seen[key][0].equals(j):
+            seen[key] = (j, convert(j))
+        return seen[key][1]
+
+    def convert(j) -> _Node:
+        name = j.nodeName()
+        if name == "AdaptiveSparkPlan":
+            kids = [convert(j.executedPlan())]
+        elif name.endswith("QueryStage"):
+            kids = [shared(j.plan())]
+        elif name == "ReusedExchange":
+            kids = [shared(j.child())]
+        elif name == "InMemoryTableScan":
+            kids = [shared(j.relation().cachedPlan())]
+        else:
+            kids = [convert(k) for k in _seq(j.children())]
+        if name in _AGGREGATES:
+            keys = _key_names(j.groupingExpressions())
+        elif name == "Window":
+            keys = _key_names(j.partitionSpec())
+        else:
+            keys = frozenset()
+        return _Node(name, keys, kids)
+
+    return convert(df._jdf.queryExecution().executedPlan())
+
+
+def _nodes(root: _Node, stop: str = "") -> Iterator[_Node]:
+    """Each distinct node under ``root`` once, not descending below
+    nodes named ``stop``."""
+    seen, todo = set(), [root]
+    while todo:
+        node = todo.pop()
+        if id(node) in seen:
             continue
-        if generated:
-            continue
-        if _WINDOW_BOUNDING.search(line):
-            return True
-        for node, nid in _TREE_NODE.findall(line):
-            if "Aggregate" not in node:
-                continue
-            block = blocks.get(nid, "")
-            km = re.search(r"^Keys(?: \[\d+\])?: \[(.*)\]$", block, re.M)
-            if km is None:
-                continue
-            keys = [k.strip() for k in km.group(1).split(",") if k.strip()]
-            if not keys:
-                return True  # keyless/global aggregate: scalar frame
-            names = {re.sub(r"#\d+\w*", "", k) for k in keys}
-            if names & BOUNDED_KEY_NAMES:
-                return True  # rankstats bucket rollup: <= n_buckets rows
-            if names <= LOW_CARD_COLS:
-                return True  # rollup keyed ONLY on low-card domains
-    return False
+        seen.add(id(node))
+        yield node
+        if node.name != stop:
+            todo.extend(node.children)
 
 
-def unbounded_global_windows(plan: str) -> int:
-    """Count Window/WindowInPandas nodes whose partition spec is empty
-    or entirely low-cardinality and whose input subtree carries no
-    structural row bound.
+def _bounds(node: _Node, windowed: bool) -> bool:
+    """True when ``node`` caps its output rows whatever its input size:
+    a limit or top-k, a keyless aggregate and, under a window, a
+    ``WindowGroupLimit`` or a rollup keyed on a bounded domain."""
+    if node.name in _ROW_CUTS or (windowed and node.name == "WindowGroupLimit"):
+        return True
+    if node.name not in _AGGREGATES:
+        return False
+    return not node.keys or (
+        windowed
+        and bool(node.keys & BOUNDED_KEY_NAMES or node.keys <= LOW_CARD_COLS)
+    )
+
+
+def _unbounded(windowed: bool):
+    """node -> whether some path down from it reaches a ``Generate``
+    (under a window, also any leaf) through no bounding node. A
+    ``Generate`` never bounds: it re-expands whatever a deeper bound
+    capped."""
+    memo: dict[int, bool] = {}
+
+    def unbounded(node: _Node) -> bool:
+        if id(node) not in memo:
+            memo[id(node)] = (
+                node.name == "Generate"
+                or (windowed and not node.children)
+                or (
+                    not _bounds(node, windowed)
+                    and any(unbounded(c) for c in node.children)
+                )
+            )
+        return memo[id(node)]
+
+    return unbounded
+
+
+def unbounded_generate_broadcasts(df: DataFrame) -> int:
+    """Count BroadcastExchanges with a path from their input down to a
+    Generate that no cardinality-bounding op (keyless aggregate or
+    limit) cuts.
+
+    Catalyst's static size estimate of a post-explode frame stays
+    anchored to the tiny scan it derives from — the row multiplication
+    of a Generate is invisible — so the planner happily auto-broadcasts
+    frames whose true cardinality scales with the corpus. At 10x docs
+    the build dies (notEnoughMemoryToBuildAndBroadcastTable); at 100 TB
+    the plan is a guaranteed job kill. The fix is ``.hint("merge")`` on
+    the corpus-sided join (see dedup/minhash.py) or bounding the frame.
+    """
+    unbounded = _unbounded(windowed=False)
+    return sum(
+        n.name == "BroadcastExchange" and unbounded(n.children[0])
+        for n in _nodes(_plan_tree(df))
+    )
+
+
+def consumer_exchanges(df: DataFrame) -> int:
+    """Count the shuffle Exchanges of ``df``'s physical plan that are not
+    under an ``InMemoryTableScan`` — the exchanges the query pays on top
+    of its caches, not the ones that built them.
+
+    A consumer of a cache that has not run yet sees unknown partitioning
+    and re-exchanges the cached rows; ``tables.materialize`` exists to
+    avoid that."""
+    return sum(
+        n.name == "Exchange"
+        for n in _nodes(_plan_tree(df), stop="InMemoryTableScan")
+    )
+
+
+def unbounded_global_windows(df: DataFrame) -> int:
+    """Count Window nodes whose partition spec is empty or entirely
+    low-cardinality and whose input has a path to a leaf or a Generate
+    that no structural row bound cuts.
 
     An empty spec plans an ``Exchange SinglePartition`` under the
     window — the entire input serializes through one task; a spec of
     only low-cardinality columns is the same straggler, K-way. A window
-    counts as bounded when its input passes through a keyless
+    counts as bounded when every path into it passes a keyless
     aggregate, an explicit row cut (limit, top-k, ``WindowGroupLimit``)
     or an aggregate keyed on a bounded-domain column (``__rsbucket``,
     the operators/rankstats.py kernel contract)."""
-    lines, detail = _split_plan(plan)
-    blocks = _detail_blocks(detail)
-    n = 0
-    for i, line in enumerate(lines):
-        m = re.search(r"\b(Window(?:InPandas)?) \((\d+)\)", line)
-        if not m:
-            continue
-        cols = _window_partition_cols(blocks.get(m.group(2), ""))
-        if cols is None:
-            continue
-        if cols and not all(c in LOW_CARD_COLS for c in cols):
-            continue
-        indent = _indent(line)
-        sub = []
-        for below in lines[i + 1 :]:
-            if _indent(below) <= indent:
-                break
-            sub.append(below)
-        if not _subtree_bounded(sub, blocks):
-            n += 1
-    return n
+    unbounded = _unbounded(windowed=True)
+    return sum(
+        n.name == "Window"
+        and n.keys <= LOW_CARD_COLS
+        and unbounded(n.children[0])
+        for n in _nodes(_plan_tree(df))
+    )

@@ -25,7 +25,6 @@ from pyspark.sql import types as T
 
 from parallel_monte_carlo_simulations_spark.plans.audit import (
     consumer_exchanges,
-    formatted_plan,
     unbounded_generate_broadcasts,
     unbounded_global_windows,
 )
@@ -64,15 +63,18 @@ BROADCAST_BOUNDED_OK: dict[str, str] = {
     "q_cms_heavy_hitters": "CMS grid fixed at D x W cells",
     "q_stream_cms_merge": "CMS grid fixed at D x W cells",
     "q_naive_bayes_confusion": "per-CLASS token totals (fixed class domain)",
-    "q_pipeline_pretraining_shards": "per-LABEL centroids (fixed label domain)",
+    "q_pipeline_pretraining_shards": (
+        "per-LABEL centroids (fixed label domain) and the rank kernel's "
+        "<= 64-row bucket offsets"
+    ),
     # Bounded probes / samples:
     "q_contamination_check": "benchmark eval-set side, tiny by definition",
     "q_text_bm25": "df of the 3 fixed query terms",
     "q_search_hybrid_rrf": "df of the 3 fixed query terms",
     "q_text_lexical_stats": "per-LANG totals (fixed language domain)",
     "q_dedup_prefix_budget_report": (
-        "scalar keyless aggregates (countDistinct's 2-stage plan hides "
-        "the keyless shape from the auto-detector)"
+        "vocabulary raise_error-guarded <= 62 tokens (same guard as "
+        "q_dedup_prefix_filter_join)"
     ),
     "q_text_rake_keywords": "doc_id < 250 kernel sample by construction",
     "q_mc_heads_frequency_qmc": "MC config shard frame (models x shards)",
@@ -83,8 +85,7 @@ BROADCAST_BOUNDED_OK: dict[str, str] = {
     ),
     "q_search_query_expansion": (
         "stage-2 df / expanded-query frames: bounded at 3 fixed + 3 "
-        "LIMIT-selected expansion terms; the union hides the GlobalLimit "
-        "from the detector's rebound check"
+        "LIMIT-selected expansion terms"
     ),
     "q_ts_sax_words": (
         "per-type tercile breakpoints: |event types| x 2 rows (fixed "
@@ -101,6 +102,7 @@ BROADCAST_BOUNDED_OK: dict[str, str] = {
         "<= 64 rows by construction — derived from the token explode so "
         "the detector sees a Generate"
     ),
+    "q_text_vocab_growth": "decile rollup: least(10, ...) caps at 10 rows",
 }
 
 #: Reviewed windows whose input is bounded for reasons the structural
@@ -114,10 +116,12 @@ WINDOW_BOUNDED_OK: dict[str, str] = {
     "q_window_moving_avg": "per-day revenue rollup (day-span rows)",
     "q_cumulative_distinct_users": "day spine of first-seen counts",
     "q_changepoint_cusum": "per-(event_type, day) rollup",
+    "q_cusum_changepoint": "per-(event_type, day) rollup",
+    "q_stat_autocorrelation": "per-day order-revenue rollup",
     "q_stat_runs_test": "zero-filled per-(event_type, day) grid",
     "q_ts_forecast_eval": "per-day rollup + one-step-back lag",
     "q_ts_seasonal_decompose": "per-day grid, +-3-day centered frame",
-    "q_ts_hurst_rs": "hourly rollup (reused subtree prints 4x)",
+    "q_ts_hurst_rs": "hourly rollup",
     "q_ts_ljung_box": "hourly rollup spine",
     "q_gapfill_forward_fill": "types x hour grid (time axis)",
     "q_survival_kaplan_meier": (
@@ -127,6 +131,10 @@ WINDOW_BOUNDED_OK: dict[str, str] = {
     # --- quantized / guarded / output-bounded domains ---
     "q_ts_sax_words": "PAA rollup: 8 segments x event types",
     "q_tree_split_gini": "p_size rollup: 50 distinct integer sizes",
+    "q_ml_gradient_boosted_stumps": (
+        "per-round l_quantity rollup: 50 distinct integer quantities"
+    ),
+    "q_feat_woe_iv": "ceil(l_quantity / 10) rollup: quantities 1..50, 5 rows",
     "q_text_vocab_growth": "decile rollup: least(10, ...) caps at 10 rows",
     "q_curation_token_budget": (
         "quality-score buckets quantized to 3dp: <= 1001 rows "
@@ -134,7 +142,7 @@ WINDOW_BOUNDED_OK: dict[str, str] = {
     ),
     "q_dedup_prefix_filter_join": (
         "vocabulary rank: raise_error-guarded <= 62 tokens (same bound "
-        "the broadcast audit whitelists; subtree reuse prints it 24x)"
+        "the broadcast audit whitelists)"
     ),
     "q_dedup_prefix_budget_report": "same guarded <= 62-token vocabulary",
     "q_source_file_metadata": (
@@ -181,12 +189,9 @@ def _build(spark, name):
         for f in df.schema.fields
         if isinstance(f.dataType, _NON_ATOMIC)
     )
-    # Formatted explain only: audit() would fall back to the costly
-    # codegen explain on a frame that has not run yet.
-    plan = formatted_plan(df)
     CHECKED[name] = Checked(
         non_atomic,
-        {kind: walker(plan) for kind, walker, _ in _PLAN_WALKERS},
+        {kind: walker(df) for kind, walker, _ in _PLAN_WALKERS},
         consumer_exchanges(df),
     )
     return df

@@ -8,7 +8,13 @@ into a sort-merge shuffle)."""
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Window
+from pyspark.sql import functions as F
 
+from parallel_monte_carlo_simulations_spark.plans.audit import (
+    unbounded_generate_broadcasts,
+    unbounded_global_windows,
+)
 from parallel_monte_carlo_simulations_spark.registry import load_all_queries
 
 from .test_oracle import (
@@ -148,8 +154,6 @@ def test_runtime_bloom_filter_injects_on_selective_join(spark):
     sizes; the assertion is that the rewrite itself is available and
     wired (broadcast is disabled to keep a shuffle join, which bloom
     injection requires)."""
-    from pyspark.sql import functions as F
-
     confs = {
         "spark.sql.autoBroadcastJoinThreshold": "-1",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "0",
@@ -250,11 +254,13 @@ def test_binned_range_join_avoids_cartesian(spark):
     assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan or "BroadcastHashJoin" in plan
 
 
-def test_unigram_lm_broadcasts_vocab(spark):
-    """The vocabulary and total-count frames are tiny; the token stream
-    must join them map-side (broadcast), never shuffle the corpus."""
+def test_unigram_lm_broadcasts_only_the_total(spark):
+    """The scalar token total joins map-side (broadcast); the vocabulary
+    grows with the corpus (Heaps' law), so the token stream joins it
+    sort-merge."""
     plan = _plan(spark, "q_text_unigram_logprob")
-    assert plan.count("BroadcastExchange") >= 2
+    assert "BroadcastNestedLoopJoin" in plan
+    assert "SortMergeJoin" in plan
     assert "ArrowEvalPython" not in plan  # pure built-ins, no Python
 
 
@@ -504,7 +510,10 @@ def test_corpus_joins_never_broadcast_corpus(spark):
         "q_text_tfidf_topterms",
         "q_text_tfidf_cosine_pairs",
         "q_text_bigram_backoff",
+        "q_text_unigram_logprob",
         "q_search_phrase",
+        "q_search_boolean_and",
+        "q_search_proximity",
         # spatial / interval candidate joins
         "q_geo_grid_proximity_join",
         "q_join_interval_overlap",
@@ -625,6 +634,63 @@ def test_registry_wide_window_audit_clean(spark):
     """Registry-wide global-window gate, same design as the broadcast
     gate above."""
     _registry_wide_audit(spark, WINDOW, WINDOW_BOUNDED_OK)
+
+
+def _toy_docs(spark):
+    return spark.createDataFrame(
+        [(i, f"w{i % 7} w{i % 3}") for i in range(40)], "id int, txt string"
+    )
+
+
+def _exploded(docs):
+    return docs.select("id", F.explode(F.split("txt", " ")).alias("tok"))
+
+
+def _keyed_explode_beside_keyless_count(docs):
+    toks = _exploded(docs).groupBy("tok").count()
+    return docs.join(F.broadcast(toks), F.col("id") == F.col("count")).crossJoin(
+        docs.agg(F.count("*").alias("n"))
+    )
+
+
+def _explode_joined_to_limit(docs):
+    side = _exploded(docs).join(docs.limit(3).select("id"), "id")
+    return docs.join(F.broadcast(side), "id")
+
+
+def _limit_on_explode(docs):
+    return docs.join(F.broadcast(_exploded(docs).limit(5)), "id")
+
+
+def _global_window_over_limit_union(docs):
+    return (
+        docs.limit(3)
+        .unionByName(docs)
+        .withColumn("r", F.row_number().over(Window.orderBy("id")))
+    )
+
+
+#: Toy plans for the plan walkers: (walker, frame, expected count). The
+#: first two broadcast cases and the window case each have a bound in
+#: one branch only, which must not excuse the unbounded sibling branch.
+TOY_WALKS = {
+    "keyed_explode_beside_keyless_count": (
+        unbounded_generate_broadcasts, _keyed_explode_beside_keyless_count, 1
+    ),
+    "explode_joined_to_limit": (
+        unbounded_generate_broadcasts, _explode_joined_to_limit, 1
+    ),
+    "limit_on_explode": (unbounded_generate_broadcasts, _limit_on_explode, 0),
+    "global_window_over_limit_union": (
+        unbounded_global_windows, _global_window_over_limit_union, 1
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(TOY_WALKS))
+def test_plan_walkers_check_every_path(spark, case):
+    walker, frame, expected = TOY_WALKS[case]
+    assert walker(frame(_toy_docs(spark))) == expected
 
 
 def test_registry_counts_agree():

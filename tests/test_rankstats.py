@@ -221,8 +221,7 @@ def test_local_windows_are_bucket_partitioned(spark):
         cums={"c": F.lit(1)},
         n_buckets=16,
     )
-    plan = formatted_plan(out)
-    assert unbounded_global_windows(plan) == 0, plan
+    assert unbounded_global_windows(out) == 0, formatted_plan(out)
 
 
 def test_null_axis_rows_sort_first_like_the_window(spark):
