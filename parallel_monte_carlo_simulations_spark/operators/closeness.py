@@ -6,19 +6,20 @@ exact-sample core) BFSes from a SAMPLE of sources and reports each
 source's harmonic centrality sum(1/dist) over reached nodes — harmonic,
 not classic closeness, because it is well-defined under disconnection
 and hop truncation. This operator runs the engine's frontier-delta BFS
-(``graph.q_graph_bfs_hops``'s formulation — per-round work tracks the
-frontier, not the visited set) from ``K_SOURCES`` sources
-SIMULTANEOUSLY: state is keyed (src_id, node), so one iteration ladder
-serves every source and the per-round joins stay co-partitioned on
-node.
+over ``graph.bipartite_edges`` (``graph.q_graph_bfs_hops``'s
+formulation — per-round work tracks the frontier, not the visited set)
+from ``K_SOURCES`` sources SIMULTANEOUSLY: state is keyed (src_id,
+node), so one iteration ladder serves every source and the per-round
+joins stay co-partitioned on node.
 
 Exactness: distances are integers in [1, MAX_HOPS]; the harmonic sum
 uses integer micro-unit weights round(1e6/d) (the irmetrics discount
 discipline), so the per-source sum is an exact BIGINT in both engines
 — one final rounded division for the reported float.
 
-Oracle: the unrolled union-min CTE ladder (the BFS oracle) with the
-source id carried through, aggregated with the same CASE weights.
+Oracle: the unrolled union-min CTE ladder (the BFS oracle) over
+``graph.EDGES_SQL`` with the source id carried through, aggregated
+with the same CASE weights.
 """
 
 from __future__ import annotations
@@ -32,8 +33,8 @@ from ..functions.microunit import (
     rdiv_halfup_expr,
 )
 from ..registry import register
-from ..tables import adaptive_partitions, materialize, release, table
-from .graph import _PART_OFFSET
+from ..tables import adaptive_partitions, materialize, release
+from .graph import EDGES_SQL, bipartite_edges
 
 K_SOURCES = 4  #: supplier node ids 1..K used as BFS sources
 MAX_HOPS = 8
@@ -47,14 +48,7 @@ _HW_CASE = "CASE dist " + " ".join(
 
 def _closeness_oracle() -> str:
     body = f"""
-WITH pairs AS (
-  SELECT DISTINCT l_suppkey AS s, l_partkey + {_PART_OFFSET} AS p FROM lineitem
-),
-edges AS (
-  SELECT s AS src, p AS dst FROM pairs
-  UNION ALL
-  SELECT p AS src, s AS dst FROM pairs
-),
+WITH {EDGES_SQL},
 d0 AS (
   SELECT src_id, src_id AS node, 0 AS dist
   FROM (SELECT unnest(range(1, {K_SOURCES} + 1)) AS src_id)
@@ -100,16 +94,9 @@ ORDER BY src_id
     tags=("graph", "centrality", "bfs", "sampling", "iterative"),
 )
 def q_graph_harmonic_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = table(spark, sf_dir, "lineitem")
-    pairs = l.select(
-        F.col("l_suppkey").alias("s"),
-        (F.col("l_partkey") + _PART_OFFSET).alias("p"),
-    ).distinct()
-    edges = pairs.select(F.col("s").alias("src"), F.col("p").alias("dst")).unionByName(
-        pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
-    )
     p = adaptive_partitions(spark, sf_dir)
-    edges = materialize(edges, p, "src")  # per-round expand joins read hash(src, p)
+    # per-round expand joins read hash(src, p)
+    edges = materialize(bipartite_edges(spark, sf_dir), p, "src")
 
     # Eager localCheckpoint per round, NOT persist: ``known`` is
     # referenced twice per round (anti-join probe + carry union), so

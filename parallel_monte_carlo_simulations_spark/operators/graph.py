@@ -1,7 +1,24 @@
-"""Iterative graph analytics: PageRank over the part-supplier graph.
+"""The part-supplier graph and the iterative analytics over it.
 
-The second iterative algorithm next to connected components
-(``dedup/clusters.py``), with a stronger verification story: a FIXED
+This module owns the graph every ``q_graph_*`` query reads, and the
+one iteration kernel PageRank and personalized PageRank share:
+
+- ``PART_OFFSET``: part node ids are ``l_partkey + PART_OFFSET``, so
+  they stay disjoint from supplier ids. ``part_node`` fails the query
+  when a key would break that.
+- ``supplier_part_pairs``: the distinct observed raw ``(s, p)`` key
+  pairs from lineitem, for the co-supplier queries.
+- ``bipartite_edges``: the same pairs as one node-id space with both
+  edge directions materialized (``src``, ``dst``) — every node has
+  outdegree >= 1, so there is no dangling-mass term to redistribute.
+  ``EDGES_SQL`` is its oracle text (the ``pairs`` and ``edges`` CTEs).
+- ``power_iteration`` / ``power_iteration_sql``: a FIXED number of
+  power iterations in Spark and as unrolled SQL CTEs.
+- ``union_min_sql``: the unrolled union-min oracle of bounded BFS and
+  SSSP.
+
+PageRank verifies like the other iterative algorithm, connected
+components (``dedup/clusters.py``), with a stronger story: a fixed
 number of power iterations is deterministic float math, so the DuckDB
 oracle replays the exact same ten iterations as ten unrolled chained
 CTEs (recursive CTEs can't aggregate per step; unrolling can). Both
@@ -11,10 +28,6 @@ divergence is ~1e-13 relative, eleven orders of magnitude inside the
 FLOOR(() * 1e4 + 0.5) / 1e4 comparison the gate hashes. The classic unnormalized form is
 used: ``rank' = (1-d) + d * sum(rank_in/outdeg_in)``, so ranks sum to
 the node count (property-tested).
-
-Graph: the bipartite observed (supplier, part) pairs from lineitem,
-with both edge directions materialized — every node has outdegree >= 1,
-so there is no dangling-mass term to redistribute.
 
 Scale notes (100 TB): edges-with-outdegree is built once and persisted;
 each iteration is one shuffle join on src plus one aggregate on dst —
@@ -32,7 +45,7 @@ iteration counts far past ten.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
@@ -40,72 +53,69 @@ from ..tables import adaptive_partitions, materialize, release, table
 
 DAMPING = 0.85
 N_ITERS = 10
-_PART_OFFSET = 1_000_000  # part node ids, disjoint from supplier ids
+PART_OFFSET = 1_000_000  # part node ids, disjoint from supplier ids
 
-
-def _pagerank_oracle() -> str:
-    iters = []
-    prev = "pr0"
-    body = f"""
-WITH pairs AS (
-  SELECT DISTINCT l_suppkey AS s, l_partkey + {_PART_OFFSET} AS p FROM lineitem
+#: The oracle spelling of ``bipartite_edges``: the ``pairs`` and
+#: ``edges`` CTEs, to follow a ``WITH``. Unfenced, so the text stays
+#: valid DuckDB SQL.
+EDGES_SQL = f"""pairs AS (
+  SELECT DISTINCT l_suppkey AS s, l_partkey + {PART_OFFSET} AS p FROM lineitem
 ),
 edges AS (
   SELECT s AS src, p AS dst FROM pairs
   UNION ALL
   SELECT p AS src, s AS dst FROM pairs
-),
-outdeg AS (
-  SELECT src, COUNT(*) AS deg FROM edges GROUP BY src
-),
-nodes AS (
-  SELECT DISTINCT src AS node FROM edges
-),
-pr0 AS (
-  SELECT node, 1.0 AS rank FROM nodes
 )"""
-    for i in range(1, N_ITERS + 1):
-        iters.append(f""",
-pr{i} AS (
-  SELECT n.node,
-         {1 - DAMPING} + {DAMPING} * COALESCE(c.contrib, 0.0) AS rank
-  FROM nodes n LEFT JOIN (
-    SELECT e.dst AS node, SUM({prev}.rank / d.deg) AS contrib
-    FROM edges e
-    JOIN {prev} ON e.src = {prev}.node
-    JOIN outdeg d ON e.src = d.src
-    GROUP BY e.dst
-  ) c ON n.node = c.node
-)""")
-        prev = f"pr{i}"
-    return (
-        body
-        + "".join(iters)
-        + f"""
-SELECT node, FLOOR((rank) * 1e4 + 0.5) / 1e4 AS rank FROM {prev}
-"""
-    )
 
 
-@register(
-    "q_graph_pagerank",
-    oracle=_pagerank_oracle(),
-    description=f"PageRank ({N_ITERS} power iterations, d={DAMPING}) on the part-supplier graph",
-    tags=("graph", "pagerank", "iterative"),
-)
-def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+def part_node(s: str, p: str) -> Column:
+    """Part key column ``p`` as a node id, ``p + PART_OFFSET``.
+
+    Fails the query when the pair's supplier key ``s`` reaches
+    ``PART_OFFSET`` (TPC-H SF >= 100) or ``p`` is negative: either would
+    silently merge a supplier and a part into one node. The supplier
+    column itself stays a plain reference, so the not-null filters
+    Catalyst infers from joins on it still reach the parquet scan."""
+    return F.when(
+        (F.col(s) >= PART_OFFSET) | (F.col(p) < 0),
+        F.raise_error(
+            F.lit(
+                "supplier and part node ids collide: needs part key >= 0 "
+                f"and supplier key < {PART_OFFSET}"
+            )
+        ),
+    ).otherwise(F.col(p) + PART_OFFSET)
+
+
+def supplier_part_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The distinct observed (supplier, part) pairs as raw keys ``(s, p)``."""
     l = table(spark, sf_dir, "lineitem")
-    pairs = (
-        l.select(
-            F.col("l_suppkey").alias("s"),
-            (F.col("l_partkey") + _PART_OFFSET).alias("p"),
-        )
-        .distinct()
+    return l.select(F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")).distinct()
+
+
+def bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The part-supplier graph as directed edges ``(src, dst)``: every
+    observed pair in both directions, parts offset by ``PART_OFFSET``."""
+    l = table(spark, sf_dir, "lineitem")
+    pairs = l.select(
+        F.col("l_suppkey").alias("s"), part_node("l_suppkey", "l_partkey").alias("p")
+    ).distinct()
+    return pairs.select(F.col("s").alias("src"), F.col("p").alias("dst")).unionByName(
+        pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
     )
-    edges = (
-        pairs.select(F.col("s").alias("src"), F.col("p").alias("dst"))
-        .unionByName(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
-    )
+
+
+def power_iteration(
+    spark: SparkSession,
+    sf_dir: str,
+    rank0: Column,
+    restart: Column,
+    damping: float,
+    n_iters: int,
+) -> DataFrame:
+    """``n_iters`` rounds of ``rank' = restart + damping * sum(rank_in /
+    outdeg_in)`` over ``bipartite_edges``, from ``rank0``. ``rank0`` and
+    ``restart`` may read the ``node`` column. Returns ``(node, rank)``."""
     # Pregel-style co-partitioning: edge state hash(src, P) and vertex
     # state hash(node, P) share one explicit partitioning, so BOTH joins
     # in every iteration are zero-exchange (bucketed-join shape) and the
@@ -143,7 +153,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gap buys back the zero-exchange per-iteration shape that matters
     # at scale.
     p = adaptive_partitions(spark, sf_dir)
-    edges_p = materialize(edges, p, "src")
+    edges_p = materialize(bipartite_edges(spark, sf_dir), p, "src")
     outdeg = edges_p.groupBy("src").agg(F.count("*").alias("deg"))
     edges_deg = materialize(edges_p.join(outdeg.hint("shuffle_hash"), "src"), p, "src")
     nodes = materialize(outdeg.select(F.col("src").alias("node")), p, "node")
@@ -173,8 +183,8 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # noise-level here — 10.75 vs 11.25 s median at sf0.1 — because the
     # unroll is compiled ONCE (no per-round driver analysis growth, the
     # thing checkpointing fixes). Not worth the materialization coupling.
-    ranks = nodes.withColumn("rank", F.lit(1.0))
-    for _ in range(N_ITERS):
+    ranks = nodes.withColumn("rank", rank0)
+    for _ in range(n_iters):
         contrib = (
             edges_deg.join(ranks.hint("shuffle_hash"), edges_deg.src == ranks.node)
             .repartition(p, "dst")
@@ -185,11 +195,79 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             contrib.hint("shuffle_hash"), nodes.node == contrib.dst, "left"
         ).select(
             "node",
-            (
-                F.lit(1 - DAMPING)
-                + F.lit(DAMPING) * F.coalesce("contrib", F.lit(0.0))
-            ).alias("rank"),
+            (restart + F.lit(damping) * F.coalesce("contrib", F.lit(0.0))).alias("rank"),
         )
+    return ranks
+
+
+def power_iteration_sql(rank0: str, restart: str, damping: float, n_iters: int) -> str:
+    """``power_iteration`` as unrolled CTEs ``pr0`` .. ``pr<n_iters>``
+    over ``EDGES_SQL``; the caller appends the final ``SELECT``.
+    ``rank0`` may read ``node``, ``restart`` reads ``n.node``."""
+    body = f"""
+WITH {EDGES_SQL},
+outdeg AS (
+  SELECT src, COUNT(*) AS deg FROM edges GROUP BY src
+),
+nodes AS (
+  SELECT DISTINCT src AS node FROM edges
+),
+pr0 AS (
+  SELECT node, {rank0} AS rank FROM nodes
+)"""
+    for i in range(1, n_iters + 1):
+        body += f""",
+pr{i} AS (
+  SELECT n.node,
+         {restart} + {damping} * COALESCE(c.contrib, 0.0) AS rank
+  FROM nodes n LEFT JOIN (
+    SELECT e.dst AS node, SUM(pr{i - 1}.rank / d.deg) AS contrib
+    FROM edges e
+    JOIN pr{i - 1} ON e.src = pr{i - 1}.node
+    JOIN outdeg d ON e.src = d.src
+    GROUP BY e.dst
+  ) c ON n.node = c.node
+)"""
+    return body
+
+
+def union_min_sql(source: int, rounds: int, step: str) -> str:
+    """Bounded shortest paths from ``source`` as unrolled union-min CTEs
+    over ``EDGES_SQL``: ``rounds`` full relaxations, each edge adding
+    ``step`` (an expression over ``src`` and ``dst``)."""
+    body = f"""
+WITH {EDGES_SQL},
+d0 AS (
+  SELECT {source} AS node, 0 AS dist
+)"""
+    for i in range(1, rounds + 1):
+        body += f""",
+d{i} AS (
+  SELECT node, MIN(dist) AS dist FROM (
+    SELECT node, dist FROM d{i - 1}
+    UNION ALL
+    SELECT e.dst AS node, d{i - 1}.dist + {step} AS dist
+    FROM edges e JOIN d{i - 1} ON e.src = d{i - 1}.node
+  ) GROUP BY node
+)"""
+    return body + f"""
+SELECT CAST(node AS BIGINT) AS node, CAST(dist AS INTEGER) AS dist FROM d{rounds}
+"""
+
+
+@register(
+    "q_graph_pagerank",
+    oracle=power_iteration_sql("1.0", f"{1 - DAMPING}", DAMPING, N_ITERS)
+    + f"""
+SELECT node, FLOOR((rank) * 1e4 + 0.5) / 1e4 AS rank FROM pr{N_ITERS}
+""",
+    description=f"PageRank ({N_ITERS} power iterations, d={DAMPING}) on the part-supplier graph",
+    tags=("graph", "pagerank", "iterative"),
+)
+def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+    ranks = power_iteration(
+        spark, sf_dir, F.lit(1.0), F.lit(1 - DAMPING), DAMPING, N_ITERS
+    )
     return ranks.select("node", (F.floor((F.col("rank")) * 1e4 + 0.5) / 1e4).alias("rank"))
 
 
@@ -252,16 +330,13 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Graph: suppliers co-supplying a part (observed in lineitem).
     """
-    li = table(spark, sf_dir, "lineitem")
-    # Explicit co-partitioning (same rationale as PageRank above): the
+    # Explicit co-partitioning (same rationale as power_iteration): the
     # wedge self-join is partitioned by apex, the closing probe by the
     # (u, v) edge pair, so under the non-adaptive collection path the
     # heavy joins run at cluster parallelism instead of the static
     # shuffle-partition count.
     p = adaptive_partitions(spark, sf_dir)
-    pairs = li.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct()
+    pairs = supplier_part_pairs(spark, sf_dir)
     a, b = pairs.alias("a"), pairs.alias("b")
     edges = (
         a.join(b, (F.col("a.p") == F.col("b.p")) & (F.col("a.s") < F.col("b.s")))
@@ -323,44 +398,9 @@ _BFS_SOURCE = 1  # supplier node s_suppkey = 1
 _BFS_HOPS = 6
 
 
-def _bfs_oracle() -> str:
-    body = f"""
-WITH pairs AS (
-  SELECT DISTINCT l_suppkey AS s, l_partkey + {_PART_OFFSET} AS p FROM lineitem
-),
-edges AS (
-  SELECT s AS src, p AS dst FROM pairs
-  UNION ALL
-  SELECT p AS src, s AS dst FROM pairs
-),
-d0 AS (
-  SELECT {_BFS_SOURCE} AS node, 0 AS dist
-)"""
-    prev = "d0"
-    parts = []
-    for i in range(1, _BFS_HOPS + 1):
-        parts.append(f""",
-d{i} AS (
-  SELECT node, MIN(dist) AS dist FROM (
-    SELECT node, dist FROM {prev}
-    UNION ALL
-    SELECT e.dst AS node, {prev}.dist + 1 AS dist
-    FROM edges e JOIN {prev} ON e.src = {prev}.node
-  ) GROUP BY node
-)""")
-        prev = f"d{i}"
-    return (
-        body
-        + "".join(parts)
-        + f"""
-SELECT CAST(node AS BIGINT) AS node, CAST(dist AS INTEGER) AS dist FROM {prev}
-"""
-    )
-
-
 @register(
     "q_graph_bfs_hops",
-    oracle=_bfs_oracle(),
+    oracle=union_min_sql(_BFS_SOURCE, _BFS_HOPS, "1"),
     description=(
         f"bounded BFS: hop distance <= {_BFS_HOPS} from supplier "
         f"{_BFS_SOURCE} on the part-supplier graph"
@@ -391,20 +431,9 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan to a scan (the dedup/clusters.py pattern); the edge cache is
     released after the loop since the checkpointed state no longer
     references it."""
-    l = table(spark, sf_dir, "lineitem")
-    pairs = (
-        l.select(
-            F.col("l_suppkey").alias("s"),
-            (F.col("l_partkey") + _PART_OFFSET).alias("p"),
-        )
-        .distinct()
-    )
-    edges = (
-        pairs.select(F.col("s").alias("src"), F.col("p").alias("dst"))
-        .unionByName(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
-    )
     p = adaptive_partitions(spark, sf_dir)
-    edges = materialize(edges, p, "src")  # per-round expand joins read hash(src, p)
+    # per-round expand joins read hash(src, p)
+    edges = materialize(bipartite_edges(spark, sf_dir), p, "src")
 
     known = (
         spark.createDataFrame([(_BFS_SOURCE, 0)], "node long, dist int")
@@ -413,8 +442,9 @@ def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     frontier = known
     for _ in range(_BFS_HOPS):
-        # shuffle_hash for the same reason as PageRank: broadcasting
-        # iteration state re-runs its prefix subtree per broadcast.
+        # shuffle_hash for the same reason as power_iteration:
+        # broadcasting iteration state re-runs its prefix subtree per
+        # broadcast.
         cand = (
             edges.join(frontier.hint("shuffle_hash"), edges.src == frontier.node)
             .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist"))

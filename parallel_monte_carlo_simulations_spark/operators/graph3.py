@@ -9,8 +9,8 @@ nodes vanish), repeat. Each round is one aggregation + one semi-join —
 the same shuffle profile per round as connected components / PageRank.
 
 This query runs a FIXED 4 peeling rounds over the supplier-part
-bipartite graph (same edge derivation as ``q_graph_pagerank``,
-``operators/graph.py:50``) and reports the surviving node/edge counts
+bipartite graph (``graph.bipartite_edges``, the edge set every
+iterative graph query reads) and reports the surviving node/edge counts
 per round — convergence is visible in the output (equal consecutive
 rows == fixpoint reached). The edge set is persisted once and each
 round shrinks only a broadcastable alive-node set (per-round state
@@ -27,10 +27,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..tables import adaptive_partitions, materialize, table
+from ..tables import adaptive_partitions, materialize
+from .graph import EDGES_SQL, PART_OFFSET, bipartite_edges, supplier_part_pairs
 
 N_ROUNDS = 4
-_PART_OFFSET = 1_000_000
 
 
 def _oracle() -> str:
@@ -39,18 +39,13 @@ def _oracle() -> str:
     # rounds. On the bipartite supplier-part graph this lands between
     # the part-degree and supplier-degree modes, so peeling removes the
     # sparse parts and converges to a nontrivial dense core.
+    # live[i]: the edges left after peeling round i (round 0: all of them)
+    live = ["edges"] + [f"e{i}" for i in range(1, N_ROUNDS + 1)]
     parts = [
         f"""
-WITH pairs AS (
-  SELECT DISTINCT l_suppkey AS s, l_partkey + {_PART_OFFSET} AS p FROM lineitem
-),
-e0 AS (
-  SELECT s AS src, p AS dst FROM pairs
-  UNION ALL
-  SELECT p AS src, s AS dst FROM pairs
-),
+WITH {EDGES_SQL},
 deg0 AS (
-  SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM e0 GROUP BY src
+  SELECT src, CAST(COUNT(*) AS BIGINT) AS deg FROM edges GROUP BY src
 ),
 ranked AS (
   SELECT deg,
@@ -67,21 +62,21 @@ thresh AS (
         parts.append(
             f""",
 keep{i} AS (
-  SELECT src FROM e{i - 1} CROSS JOIN thresh
+  SELECT src FROM {live[i - 1]} CROSS JOIN thresh
   GROUP BY src, thresh.k
   HAVING COUNT(*) >= MAX(thresh.k)
 ),
 e{i} AS (
   SELECT e.src, e.dst
-  FROM e{i - 1} e
+  FROM {live[i - 1]} e
   WHERE e.src IN (SELECT src FROM keep{i})
     AND e.dst IN (SELECT src FROM keep{i})
 )"""
         )
     rounds_union = "\nUNION ALL\n".join(
         f"SELECT {i} AS round, "
-        f"(SELECT CAST(COUNT(DISTINCT src) AS BIGINT) FROM e{i}) AS n_nodes, "
-        f"(SELECT CAST(COUNT(*) AS BIGINT) FROM e{i}) AS n_directed_edges"
+        f"(SELECT CAST(COUNT(DISTINCT src) AS BIGINT) FROM {live[i]}) AS n_nodes, "
+        f"(SELECT CAST(COUNT(*) AS BIGINT) FROM {live[i]}) AS n_directed_edges"
         for i in range(0, N_ROUNDS + 1)
     )
     parts.append(f"\n{rounds_union}\nORDER BY round")
@@ -103,14 +98,7 @@ _QKCORE_ORACLE = _oracle()
     tags=("graph", "kcore", "iterative", "aggregate", "scale"),
 )
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = table(spark, sf_dir, "lineitem")
-    pairs = l.select(
-        F.col("l_suppkey").alias("s"),
-        (F.col("l_partkey") + _PART_OFFSET).alias("p"),
-    ).distinct()
-    edges = pairs.select(
-        F.col("s").alias("src"), F.col("p").alias("dst")
-    ).unionByName(pairs.select(F.col("p").alias("src"), F.col("s").alias("dst")))
+    edges = bipartite_edges(spark, sf_dir)
 
     from pyspark.sql import Window
 
@@ -139,7 +127,7 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lineage cut the logical plan doubles per round — in the plain
     # driver-contract session (1g heap, default confs) the persist()
     # version measured 138 s at sf0.01 and risks the plan-logging OOM
-    # that killed the BFS queries (graph.py:357); checkpointed it is
+    # that killed the BFS queries (graph.q_graph_bfs_hops); checkpointed it is
     # ~4 s. The edge cache stays for the final per-round summary scans.
     # Repartition to defaultParallelism BEFORE caching: without it the
     # cached union carries 2x the session's shuffle-partition count
@@ -231,10 +219,7 @@ def q_graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     for pairs sharing at least one part (the join is keyed on the part,
     so work is sum-of-squared part degrees, not |suppliers|^2), and
     union comes from the degree table by inclusion-exclusion."""
-    l = table(spark, sf_dir, "lineitem")
-    pairs = l.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct()
+    pairs = supplier_part_pairs(spark, sf_dir)
     deg = pairs.groupBy("s").agg(F.count("*").alias("d"))
     b = pairs.select(F.col("s").alias("s2"), F.col("p").alias("p2"))
     co = (
@@ -318,10 +303,7 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     instead of 1: common parts say little about a specific pair. The
     weight is rounded to 12 dp and summed as DECIMAL so the score is
     independent of partition merge order."""
-    l = table(spark, sf_dir, "lineitem")
-    pairs = l.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct()
+    pairs = supplier_part_pairs(spark, sf_dir)
     w = (
         pairs.groupBy("p")
         .agg(F.count("*").alias("d"))
@@ -361,20 +343,13 @@ def q_graph_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 _QASSORT_ORACLE = f"""
-WITH pairs AS (
-  SELECT DISTINCT l_suppkey AS s, l_partkey + {_PART_OFFSET} AS p FROM lineitem
-),
-e AS (
-  SELECT s AS src, p AS dst FROM pairs
-  UNION ALL
-  SELECT p AS src, s AS dst FROM pairs
-),
+WITH {EDGES_SQL},
 deg AS (
-  SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM e GROUP BY src
+  SELECT src, CAST(COUNT(*) AS BIGINT) AS d FROM edges GROUP BY src
 ),
 ends AS (
   SELECT ds.d AS dx, dd.d AS dy
-  FROM e
+  FROM edges e
   JOIN deg ds ON ds.src = e.src
   JOIN deg dd ON dd.src = e.dst
 ),
@@ -411,14 +386,7 @@ FROM mom
     tags=("graph", "assortativity", "statistics", "aggregate"),
 )
 def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = table(spark, sf_dir, "lineitem")
-    pairs = l.select(
-        F.col("l_suppkey").alias("s"),
-        (F.col("l_partkey") + _PART_OFFSET).alias("p"),
-    ).distinct()
-    e = pairs.select(F.col("s").alias("src"), F.col("p").alias("dst")).unionByName(
-        pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
-    )
+    e = bipartite_edges(spark, sf_dir)
     deg = e.groupBy("src").agg(F.count("*").alias("d"))
     ds = deg.select(F.col("src").alias("j_src"), F.col("d").alias("dx"))
     dd = deg.select(F.col("src").alias("j_dst"), F.col("d").alias("dy"))
@@ -459,22 +427,15 @@ _LPA_ROUNDS = 4
 def _lpa_oracle() -> str:
     parts = [
         f"""
-WITH pairs AS (
-  SELECT DISTINCT l_suppkey AS s, l_partkey + {_PART_OFFSET} AS p FROM lineitem
-),
-e AS (
-  SELECT s AS src, p AS dst FROM pairs
-  UNION ALL
-  SELECT p AS src, s AS dst FROM pairs
-),
-l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM e)"""
+WITH {EDGES_SQL},
+l0 AS (SELECT DISTINCT src AS node, src AS lbl FROM edges)"""
     ]
     for i in range(1, _LPA_ROUNDS + 1):
         parts.append(
             f""",
 c{i} AS (
   SELECT e.dst AS node, l.lbl, CAST(COUNT(*) AS BIGINT) AS c
-  FROM e JOIN l{i - 1} l ON l.node = e.src
+  FROM edges e JOIN l{i - 1} l ON l.node = e.src
   GROUP BY e.dst, l.lbl
 ),
 m{i} AS (SELECT node, MAX(c) AS mx FROM c{i} GROUP BY node),
@@ -488,9 +449,9 @@ l{i} AS (
         f"""
 SELECT CAST(lbl AS BIGINT) AS community,
        CAST(COUNT(*) AS BIGINT) AS n_members,
-       CAST(SUM(CASE WHEN node >= {_PART_OFFSET} THEN 1 ELSE 0 END)
+       CAST(SUM(CASE WHEN node >= {PART_OFFSET} THEN 1 ELSE 0 END)
             AS BIGINT) AS n_parts,
-       CAST(SUM(CASE WHEN node < {_PART_OFFSET} THEN 1 ELSE 0 END)
+       CAST(SUM(CASE WHEN node < {PART_OFFSET} THEN 1 ELSE 0 END)
             AS BIGINT) AS n_suppliers
 FROM l{_LPA_ROUNDS}
 GROUP BY lbl
@@ -525,15 +486,7 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph because labels flow along edges, never through the driver.
     Initial label = own node id (integer; parts offset above
     suppliers), so community ids are stable meaningful anchors."""
-    li = table(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        F.col("l_suppkey").alias("s"),
-        (F.col("l_partkey") + _PART_OFFSET).alias("p"),
-    ).distinct()
-    e = pairs.select(F.col("s").alias("src"), F.col("p").alias("dst")).unionAll(
-        pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
-    )
-    e = e.persist()
+    e = bipartite_edges(spark, sf_dir).persist()
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("lbl")
     )
@@ -558,10 +511,10 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         labels.groupBy(F.col("lbl").cast("long").alias("community"))
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_members"),
-            F.sum(F.when(F.col("node") >= _PART_OFFSET, 1).otherwise(0))
+            F.sum(F.when(F.col("node") >= PART_OFFSET, 1).otherwise(0))
             .cast("long")
             .alias("n_parts"),
-            F.sum(F.when(F.col("node") < _PART_OFFSET, 1).otherwise(0))
+            F.sum(F.when(F.col("node") < PART_OFFSET, 1).otherwise(0))
             .cast("long")
             .alias("n_suppliers"),
         )

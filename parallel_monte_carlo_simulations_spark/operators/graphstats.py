@@ -7,7 +7,8 @@ skew diagnostic that decides whether the iterative algorithms need
 salting. Buckets use exact integer edge comparisons (not
 floor(log2(.)) — see dedup/containment.py's df report for why), so
 both engines agree exactly. Same supplier-part bipartite projection
-the rest of the graph family uses (operators/graph.py).
+the rest of the graph family uses (``graph.supplier_part_pairs``, with
+parts offset by ``graph.PART_OFFSET`` into one node-id space).
 """
 
 from __future__ import annotations
@@ -17,7 +18,7 @@ from pyspark.sql import functions as F
 
 from ..functions.microunit import rdiv_halfup_duck, rdiv_halfup_expr
 from ..registry import register
-from ..tables import table
+from .graph import PART_OFFSET, part_node, supplier_part_pairs
 
 _EDGES = (
     "SELECT DISTINCT l_suppkey AS s, l_partkey AS p FROM lineitem"
@@ -36,7 +37,7 @@ deg AS (
   SELECT node, CAST(COUNT(*) AS BIGINT) AS deg FROM (
     SELECT s AS node FROM pairs
     UNION ALL
-    SELECT p + 1000000 AS node FROM pairs
+    SELECT p + {PART_OFFSET} AS node FROM pairs
   ) GROUP BY node
 ),
 tot AS (
@@ -68,12 +69,10 @@ GROUP BY 1
     tags=("graph", "profiling", "histogram", "aggregate", "scale"),
 )
 def q_graph_degree_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    pairs = li.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct()
+    pairs = supplier_part_pairs(spark, sf_dir)
+    # every pair has a part row, so part_node fences both keys
     nodes = pairs.select(F.col("s").alias("node")).unionAll(
-        pairs.select((F.col("p") + 1_000_000).alias("node"))
+        pairs.select(part_node("s", "p").alias("node"))
     )
     deg = nodes.groupBy("node").agg(F.count(F.lit(1)).cast("long").alias("deg"))
     tot = deg.agg(
@@ -144,10 +143,7 @@ FROM co GROUP BY s
     tags=("graph", "bipartite", "join", "profiling"),
 )
 def q_graph_cosuppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = table(spark, sf_dir, "lineitem")
-    pairs0 = li.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct()
+    pairs0 = supplier_part_pairs(spark, sf_dir)
     keep = (
         pairs0.groupBy("p")
         .agg(F.count(F.lit(1)).alias("deg"))

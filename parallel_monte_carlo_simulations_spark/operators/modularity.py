@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ..tables import table
+from .graph import supplier_part_pairs
 
 _QMOD_ORACLE = """
 WITH pairs AS (
@@ -87,11 +88,8 @@ FROM terms CROSS JOIN m
     tags=("graph", "modularity", "community", "statistics", "aggregate"),
 )
 def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    l = table(spark, sf_dir, "lineitem")
     s = table(spark, sf_dir, "supplier")
-    pairs = l.select(
-        F.col("l_suppkey").alias("s"), F.col("l_partkey").alias("p")
-    ).distinct()
+    pairs = supplier_part_pairs(spark, sf_dir)
     b = pairs.select(F.col("s").alias("s2"), F.col("p").alias("p2"))
     edges = (
         pairs.join(b, (F.col("p2") == F.col("p")) & (F.col("s") < F.col("s2")))

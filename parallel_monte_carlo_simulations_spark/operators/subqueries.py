@@ -19,6 +19,7 @@ from ..functions.microunit import (
 )
 from ..registry import register
 from ..tables import table
+from .graph import EDGES_SQL
 
 
 def _views(spark: SparkSession, sf_dir: str, *names: str) -> None:
@@ -331,15 +332,8 @@ def q_sub_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the part-supplier graph — identical SQL text on both engines.
 # --------------------------------------------------------------------------
 
-_QRECURSIVE = """
-WITH RECURSIVE pairs AS (
-  SELECT DISTINCT l_suppkey AS s, l_partkey + 1000000 AS p FROM lineitem
-),
-edges AS (
-  SELECT s AS src, p AS dst FROM pairs
-  UNION ALL
-  SELECT p AS src, s AS dst FROM pairs
-),
+_QRECURSIVE = f"""
+WITH RECURSIVE {EDGES_SQL},
 walk(node, depth) AS (
   SELECT CAST(1 AS BIGINT) AS node, 0 AS depth
   UNION ALL
@@ -370,6 +364,8 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     outer MIN collapses path multiplicity to distances. The DataFrame
     formulation of the same computation (explicitly co-partitioned,
     shuffle-hash-hinted) is ``q_graph_bfs_hops`` — this query proves the
-    declarative front-end parity."""
+    declarative front-end parity. The graph is ``graph.EDGES_SQL``,
+    without the node-id collision fence of ``graph.bipartite_edges``:
+    the text is shared with DuckDB on purpose, so it stays plain SQL."""
     _views(spark, sf_dir, "lineitem")
     return spark.sql(_QRECURSIVE)

@@ -71,7 +71,8 @@ def _nearest(df: DataFrame, cent: DataFrame) -> DataFrame:
     dedup consumers (10.9 s vs 7.0-8.8 s) with identical results: the
     interpreted struct-min comparator over an embedded 64-double array
     costs more than the extra shuffle volume saves at these row counts.
-    Same lesson as operators/graph.py:134-145 — don't re-walk it without
+    Same lesson as the measured dead ends beside
+    operators/graph.py's power_iteration — don't re-walk it without
     re-measuring at much larger |df| x K, where shuffle volume should
     eventually win."""
     # Measured dead end (r5, same-JVM paired A/B): dist2_unrolled(..., 64)

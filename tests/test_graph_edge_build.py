@@ -1,46 +1,38 @@
-"""Focused tests for the r13 round-2 single-edge-exchange graph build.
+"""Focused tests for the part-supplier graph of ``operators/graph.py``.
 
-The restructured q_graph_pagerank / q_graph_ppr setup derives the node
-set from the outdegree table instead of a separate distinct over the
-full edge frame. That is only sound because BOTH edge directions are
-materialized, so every node appears at least once as a src — these
-tests pin that property and the end-to-end invariants that depend on
-it on real driver testdata.
+q_graph_pagerank / q_graph_ppr derive the node set from the outdegree
+table instead of a separate distinct over the full edge frame. That is
+only sound because ``bipartite_edges`` materializes BOTH edge
+directions, so every node appears at least once as a src — these tests
+pin that property and the end-to-end invariants that depend on it on
+real driver testdata, and the fence that keeps supplier and part node
+ids disjoint.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from parallel_monte_carlo_simulations_spark.operators.graph import (
-    _PART_OFFSET,
+    PART_OFFSET,
+    bipartite_edges,
     q_graph_pagerank,
 )
 from parallel_monte_carlo_simulations_spark.operators.graph2 import q_graph_ppr
-from parallel_monte_carlo_simulations_spark.tables import table
+from parallel_monte_carlo_simulations_spark.registry import load_all_queries
 
 SF = "/root/testdata/sf0.001"
-
-
-def _edges(spark):
-    pairs = (
-        table(spark, SF, "lineitem")
-        .select(
-            F.col("l_suppkey").alias("s"),
-            (F.col("l_partkey") + _PART_OFFSET).alias("p"),
-        )
-        .distinct()
-    )
-    return pairs.select(F.col("s").alias("src"), F.col("p").alias("dst")).unionByName(
-        pairs.select(F.col("p").alias("src"), F.col("s").alias("dst"))
-    )
+SPECS = load_all_queries()
 
 
 def test_outdeg_keys_are_the_distinct_node_set(spark):
     """src-set == src ∪ dst set: the outdeg table's key column IS the
     node set, so replacing the nodes-distinct subtree with
     outdeg.select(src) loses no node and invents none."""
-    edges = _edges(spark)
+    edges = bipartite_edges(spark, SF)
     srcs = {r.src for r in edges.select("src").distinct().collect()}
     nodes = {
         r.node
@@ -56,8 +48,7 @@ def test_pagerank_covers_every_node_and_conserves_mass(spark):
     """One output row per node, and the unnormalized formulation's mass
     invariant (ranks sum to the node count) still holds after the
     edge-build restructure."""
-    edges = _edges(spark)
-    n_nodes = edges.select("src").distinct().count()
+    n_nodes = bipartite_edges(spark, SF).select("src").distinct().count()
     out = q_graph_pagerank(spark, SF)
     rows = out.collect()
     assert len(rows) == n_nodes
@@ -68,10 +59,29 @@ def test_pagerank_covers_every_node_and_conserves_mass(spark):
 
 
 def test_ppr_covers_every_node_and_masses_bounded(spark):
-    edges = _edges(spark)
-    n_nodes = edges.select("src").distinct().count()
+    n_nodes = bipartite_edges(spark, SF).select("src").distinct().count()
     rows = q_graph_ppr(spark, SF).collect()
     assert len(rows) == n_nodes
     assert all(r.rank >= 0.0 for r in rows)
-    # personalized mass leaks only through quantization: sum <= 1 + eps
-    assert sum(r.rank for r in rows) <= 1.0 + n_nodes * 1e-6
+    # every node has outdegree >= 1, so each round passes on all of its
+    # mass: the total stays 1, up to the 1e-6 quantization per node
+    assert abs(sum(r.rank for r in rows) - 1.0) <= n_nodes * 1e-6
+
+
+@pytest.mark.parametrize("name", ["q_graph_assortativity", "q_graph_degree_histogram"])
+@pytest.mark.parametrize(
+    "suppkey, partkey",
+    [(PART_OFFSET + 1, 5), (3, 1 - PART_OFFSET)],
+    ids=["supplier_at_part_id", "negative_part"],
+)
+def test_node_id_collision_fails_loudly(spark, tmp_path, name, suppkey, partkey):
+    """A supplier key that reaches PART_OFFSET, or a negative part key,
+    would merge a supplier and a part into one node (node 1_000_001 or
+    node 1 here); the graph fails instead of answering for the merged
+    graph."""
+    pq.write_table(
+        pa.table({"l_suppkey": [1, suppkey], "l_partkey": [1, partkey]}),
+        tmp_path / "lineitem.parquet",
+    )
+    with pytest.raises(Exception, match="node ids collide"):
+        SPECS[name].fn(spark, str(tmp_path)).collect()

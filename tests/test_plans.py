@@ -206,11 +206,13 @@ def test_zorder_layout_stays_jvm_side(spark):
     assert plan.count("+- Exchange") == 1 and "HashAggregate" in plan
 
 
-def test_pagerank_iteration_uses_shuffled_hash_join(spark):
+@pytest.mark.parametrize("name", ["q_graph_pagerank", "q_graph_ppr"])
+def test_pagerank_iteration_uses_shuffled_hash_join(spark, name):
     """Iteration state must NOT be broadcast (prefix re-materialization
-    + un-broadcastable at scale): the shuffle_hash hint has to survive
-    planning as ShuffledHashJoin."""
-    plan = _plan(spark, "q_graph_pagerank")
+    + un-broadcastable at scale): the shuffle_hash hint in
+    ``graph.power_iteration`` has to survive planning as
+    ShuffledHashJoin in both queries that run the kernel."""
+    plan = _plan(spark, name)
     assert "ShuffledHashJoin" in plan
 
 

@@ -19,6 +19,7 @@ PROPS = [
     ("BroadcastHashJoin", "dimension sides broadcast"),
     ("TakeOrderedAndProject", "top-k without a global sort"),
     ("ArrowEvalPython", "Arrow-batched Python (only where semantics need it)"),
+    ("raise_error", "bad input fails the query (raise_error fence)"),
 ]
 
 
