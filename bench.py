@@ -285,9 +285,9 @@ def _attempt_main(child_out: str | None = None) -> None:
     spark.sparkContext.setLogLevel("ERROR")
     specs = load_all_queries()
 
-    # Warm the JVM/codegen and the Python-worker daemon once so per-query
-    # numbers reflect steady state (first mapInPandas otherwise pays the
-    # numpy/pandas import in every forked worker).
+    # Warm the JVM/codegen and start the Python daemon once so per-query
+    # numbers reflect steady state (the daemon imports numpy, pandas,
+    # pyarrow and the package before forking workers; see session.py).
     specs["q_filter_project"].fn(spark, SF_DIR).count()
     spark.range(64).repartition(8).mapInPandas(
         lambda it: it, schema="id long"

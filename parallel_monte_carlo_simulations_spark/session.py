@@ -36,9 +36,19 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
     # Measured on this Spark build: the reused-worker pool serializes
     # pathologically above ~20 concurrent Python tasks (32 no-op
-    # mapInPandas tasks: ~30 s with reuse, ~2.7 s without). Fresh forks
-    # from the daemon are ~80 ms — cheaper than the pool contention.
+    # mapInPandas tasks: ~30 s with reuse, ~2.7 s without), so every
+    # task gets a fresh fork. The fork comes from the daemon below,
+    # which has already imported numpy, pandas, pyarrow, the worker and
+    # this package, so a task pays the fork (~80 ms) and the unpickling
+    # of its function, not the 0.6-1.6 s of imports per task measured
+    # on a 4-core box with the stock daemon.
     "spark.python.worker.reuse": "false",
+    # Executors start their Python daemon as `python -m <this module>`
+    # (the __main__ block at the end of this file). On a cluster the
+    # executors must therefore be able to import this package; they
+    # already must, to unpickle MCBattery's closure (rng_for and
+    # _call_model are pickled by reference).
+    "spark.python.daemon.module": __name__,
     # events.parquet carries TIMESTAMP(NANOS), which the Spark parquet
     # reader rejects unless nanos are surfaced as longs (converted to
     # micros by tables._events with exact integer division).
@@ -122,3 +132,18 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+if __name__ == "__main__":
+    # Python daemon entry (DEFAULT_CONF["spark.python.daemon.module"]):
+    # import the worker stack once, then fork every worker from here.
+    import numpy  # noqa: F401
+    import pandas  # noqa: F401
+    import pyarrow  # noqa: F401
+    import pyspark.sql.pandas.serializers  # noqa: F401
+    import pyspark.worker  # noqa: F401
+    from pyspark import daemon
+
+    from .mc import battery  # noqa: F401
+
+    daemon.manager()

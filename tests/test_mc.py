@@ -210,6 +210,55 @@ def test_spark_conf_applied(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def test_python_workers_fork_from_the_preloading_daemon(spark):
+    """Every Python task is forked from the session's own daemon module,
+    which imported numpy, pandas and pyarrow before forking; BLAS, Arrow
+    compute and pandas must still give the driver's numbers after the
+    fork."""
+    from parallel_monte_carlo_simulations_spark.session import DEFAULT_CONF
+
+    def probe():
+        import numpy as np
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        a = (np.arange(256 * 256, dtype=np.float64).reshape(256, 256) % 7) - 3
+        frame = pd.DataFrame({"k": np.arange(1000) % 3, "v": np.arange(1000)})
+        return (
+            float((a @ a.T).sum()),
+            int(pc.sum(pa.array(range(1000))).as_py()),
+            [int(x) for x in frame.groupby("k")["v"].sum()],
+        )
+
+    def task(batches):
+        import sys
+
+        import pandas as pd
+
+        for _ in batches:
+            pass
+        matmul, arrow, groupby = probe()
+        yield pd.DataFrame({
+            "module": [sys.modules["__main__"].__spec__.name],
+            "ppid": [os.getppid()],
+            "matmul": [matmul],
+            "arrow": [arrow],
+            "groupby": [groupby],
+        })
+
+    rows = spark.range(4, numPartitions=4).mapInPandas(
+        task,
+        "module string, ppid long, matmul double, arrow long, groupby array<long>",
+    ).collect()
+    assert len(rows) == 4
+    assert {r.module for r in rows} == {DEFAULT_CONF.get("spark.python.daemon.module")}
+    assert len({r.ppid for r in rows}) == 1
+    expected = probe()
+    for r in rows:
+        assert (r.matmul, r.arrow, list(r.groupby)) == expected
+
+
 def test_gbm_option_price_matches_black_scholes(spark):
     """MC estimate of a European call must land within ~4 standard errors
     of the Black-Scholes closed form (risk-neutral GBM, same params as

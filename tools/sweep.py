@@ -26,6 +26,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import shutil
 import signal
 import sys
 import time
@@ -40,7 +41,6 @@ SF = float(re.fullmatch(r"sf([\d.]+)", SF_NAME).group(1))
 OUT = sys.argv[2] if len(sys.argv) > 2 else os.path.join(REPO, f".sweep_{SF_NAME}.jsonl")
 TIMEOUT_S = int(sys.argv[3]) if len(sys.argv) > 3 else 600
 ONLY = set(sys.argv[4:])
-DUCK_MEM = os.environ.get("SWEEP_DUCK_MEM", "24GB")
 
 #: Optional horizontal split for wall-clock: SWEEP_SHARD="0/2" runs the
 #: even-indexed names, "1/2" the odd ones, each process with its own
@@ -74,13 +74,22 @@ def main() -> None:
     suffix = f"-{SHARD.replace('/', '_')}" if SHARD else ""
     tmp = os.path.join(REPO, f".duck_tmp{suffix}")
     os.makedirs(tmp, exist_ok=True)
-    spill_cap = os.environ.get("SWEEP_DUCK_SPILL", "60GB")
+    # Defaults come from the box: ~40% of physical RAM for DuckDB (the
+    # Spark driver heap shares the rest) and half of the free disk under
+    # the temp dir as the spill cap. SWEEP_DUCK_MEM / SWEEP_DUCK_SPILL
+    # override.
+    ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    duck_mem = os.environ.get("SWEEP_DUCK_MEM", f"{int(ram * 0.4) >> 20}MiB")
+    spill_cap = os.environ.get(
+        "SWEEP_DUCK_SPILL", f"{shutil.disk_usage(tmp).free // 2 >> 20}MiB"
+    )
+    print(f"duckdb: memory_limit={duck_mem} max_temp_directory_size={spill_cap}")
 
     orig_connect = duckdb.connect
 
     def bounded_connect(*a, **kw):
         con = orig_connect(*a, **kw)
-        con.execute(f"SET memory_limit='{DUCK_MEM}'")
+        con.execute(f"SET memory_limit='{duck_mem}'")
         if DUCK_THREADS:
             con.execute(f"SET threads={int(DUCK_THREADS)}")
         con.execute(f"SET temp_directory='{tmp}'")
