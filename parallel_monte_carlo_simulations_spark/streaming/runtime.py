@@ -19,6 +19,7 @@ the slack.
 
 from __future__ import annotations
 
+import os
 import tempfile
 import uuid
 
@@ -27,7 +28,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from .confscope import state_partitions_scope
-from ..tables import table
+from ..tables import _normalize_ts, _read, table
 from .windows import _QTUMBLE_ORACLE, tumbling_hourly
 
 
@@ -35,11 +36,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events table (schema pinned from the
     batch reader; nanos ts handled identically)."""
     batch = table(spark, sf_dir, "events")  # also ensures nanosAsLong
-    raw = spark.read.parquet(f"{sf_dir}/events.parquet")
+    # The raw file schema, before ts normalization; the tables reader
+    # already holds it, so this infers nothing.
+    raw = _read(spark, os.path.join(sf_dir, "events.parquet"))
     # The file stream source requires a DIRECTORY; point it at sf_dir and
     # glob-filter to the events file.
-    from ..tables import _normalize_ts
-
     stream = (
         spark.readStream.schema(raw.schema)
         .option("pathGlobFilter", "events.parquet")

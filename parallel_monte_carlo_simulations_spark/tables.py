@@ -3,13 +3,25 @@
 Tables per TESTDATA.md / FIXTURES.md §A. All reads go through
 ``table()`` so predicate pushdown / column pruning reach the parquet
 scan (verify with ``df.explain("formatted")`` — PushedFilters/ReadSchema).
+
+Schema inference runs one footer-reading Spark job per
+``spark.read.parquet`` call, so ``table()`` infers each file's schema once
+per process and passes it to ``spark.read.schema`` after that. The cache
+key is the absolute path, the file's identity (inode, mtime and size for a
+single file; every file's relative name, size and mtime for a directory
+layout) and the session's values of the confs that change inference, so a
+rewritten file or a session that reads it differently gets a fresh
+inference. A path ``os.stat`` cannot see (a non-local URI, a missing file)
+is read uncached, exactly as ``spark.read.parquet`` reads it.
 """
 
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = (
     "region",
@@ -32,12 +44,65 @@ BROADCAST_DIMS = ("region", "nation", "supplier", "part", "customer")
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+#: Session confs whose values change the schema parquet inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+)
+
+#: (path, file identity, inference confs) -> the schema inference returned.
+#: Threads racing on one key both infer and store equal schemas.
+_SCHEMAS: dict[tuple, StructType] = {}
+
+
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
     if name == "events":
         return _events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def _file_identity(path: str) -> tuple:
+    """What changes when ``path`` is rewritten; raises OSError if
+    ``os.stat`` cannot see it."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_mtime_ns, st.st_size)
+    files = []
+    for root, _dirs, names in os.walk(path):
+        for f in names:
+            full = os.path.join(root, f)
+            fst = os.stat(full)
+            files.append((os.path.relpath(full, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def _read(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with the schema inferred once per
+    file identity and inference confs (module docstring).
+
+    Spark makes a file source's schema nullable, and inference already
+    returns a nullable schema, so a pinned read plans exactly as an
+    inferring one.
+    """
+    try:
+        identity = _file_identity(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (
+        os.path.abspath(path),
+        identity,
+        tuple(spark.conf.get(k) for k in _INFERENCE_CONFS),
+    )
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -56,7 +121,7 @@ def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .session import ensure_nanos_as_long
 
     ensure_nanos_as_long(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = _read(spark, os.path.join(sf_dir, "events.parquet"))
     return df.withColumn("ts", _normalize_ts(df))
 
 

@@ -1,6 +1,6 @@
 """Regression tests for the round-2 advisory fixes: PNG decoder input
 hardening, sessionize tie-break determinism, and the pydantic-v1 config
-fallback path."""
+fallback path; and for the table reader's per-file schema cache."""
 
 from __future__ import annotations
 
@@ -235,3 +235,97 @@ def test_local_checkpoint_release_is_real(spark):
     assert len(sc.getRDDStorageInfo()) == base + 1
     release(cached)
     assert len(sc.getRDDStorageInfo()) == base
+
+
+# -- the table reader's schema cache (tables._read) --------------------------
+
+
+def test_warm_plan_build_starts_no_spark_job(spark):
+    # Parquet schema inference is one footer-reading Spark job per read,
+    # and the benchmark's 8 SQL queries make 22 table reads. Once each
+    # table's schema is cached, building them again must start no job.
+    from parallel_monte_carlo_simulations_spark.registry import load_all_queries
+    from perfbench.workloads import DATA_DIR, SQL_TPCH
+
+    specs = load_all_queries()
+    for name in SQL_TPCH:
+        specs[name].fn(spark, DATA_DIR)
+    sc = spark.sparkContext
+    group = "warm-plan-build"
+    sc.setJobGroup(group, "build the sql_tpch queries on a warm schema cache")
+    try:
+        for name in SQL_TPCH:
+            specs[name].fn(spark, DATA_DIR)
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_rewritten_single_file_table_gets_new_schema(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parallel_monte_carlo_simulations_spark.tables import table
+
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    df = table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(r.r_name for r in df.collect()) == ["A", "B"]
+
+
+def test_rewritten_directory_table_gets_new_schema(spark, tmp_path):
+    from parallel_monte_carlo_simulations_spark.tables import table
+
+    path = str(tmp_path / "region.parquet")
+    spark.range(2).toDF("r_regionkey").coalesce(1).write.mode("overwrite").parquet(path)
+    assert table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    (
+        spark.range(2).selectExpr("id AS r_regionkey", "CAST(id AS STRING) AS r_name")
+        .coalesce(1).write.mode("overwrite").parquet(path)
+    )
+    df = table(spark, str(tmp_path), "region")
+    assert df.columns == ["r_regionkey", "r_name"]
+    assert sorted(r.r_name for r in df.collect()) == ["0", "1"]
+
+
+def test_inference_conf_is_part_of_the_schema_key(spark, tmp_path):
+    # A TIMESTAMP(NANOS) column reads as a long only under nanosAsLong;
+    # with it off, a fresh inference must reject the file rather than
+    # reuse the long schema cached under the other setting.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+    from pyspark.sql import types as T
+
+    from parallel_monte_carlo_simulations_spark.tables import table
+
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([1], pa.int64()),
+                  "ts": pa.array([1], pa.timestamp("ns"))}),
+        str(tmp_path / "region.parquet"), version="2.6", coerce_timestamps=None,
+    )
+    before = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        df = table(spark, str(tmp_path), "region")
+        assert df.schema["ts"].dataType == T.LongType()
+        spark.conf.set(conf, "false")
+        with pytest.raises(AnalysisException) as err:
+            table(spark, str(tmp_path), "region")
+        assert err.value.getCondition() == "PARQUET_TYPE_ILLEGAL"
+    finally:
+        spark.conf.set(conf, before)
+
+
+def test_missing_table_raises_path_not_found(spark, tmp_path):
+    from pyspark.errors import AnalysisException
+
+    from parallel_monte_carlo_simulations_spark.tables import table
+
+    with pytest.raises(AnalysisException) as err:
+        table(spark, str(tmp_path), "region")
+    assert err.value.getCondition() == "PATH_NOT_FOUND"
