@@ -30,7 +30,7 @@ from collections.abc import Callable, Iterator, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from .models import BatteryConfigs, SimulationConfig, validate_simulation_configs
-from .seeds import fresh_master_seed, rng_for
+from .seeds import fresh_master_seed, shard_rngs
 
 logger = logging.getLogger(__name__)
 
@@ -58,6 +58,17 @@ def _call_model(
         return model(number_points, rng, parameters, starting_point)
     # starting_point without parameters — pass parameters=None explicitly.
     return model(number_points, rng, None, starting_point)
+
+
+def _shard_ranges(cfgs: list[SimulationConfig]) -> list[tuple[int, int, int]]:
+    """``(model_id, sim_lo, sim_hi)`` per shard: each model's simulations
+    cut into ``batch_size`` runs."""
+    shards = []
+    for model_id, cfg in enumerate(cfgs):
+        n, bs = cfg.number_simulations, cfg.batch_size
+        for b in range(math.ceil(n / bs)):
+            shards.append((model_id, b * bs, min((b + 1) * bs, n)))
+    return shards
 
 
 class MCBattery:
@@ -105,6 +116,8 @@ class MCBattery:
             )
         if trace_dtype not in _TRACE_SCHEMA:
             raise ValueError(f"trace_dtype must be one of {sorted(_TRACE_SCHEMA)}")
+        if master_seed is not None and master_seed < 0:
+            raise ValueError(f"master_seed must be non-negative, got {master_seed}")
 
         cfgs = validate_simulation_configs(
             [
@@ -132,9 +145,13 @@ class MCBattery:
             )
         )
         self.last_master_seed = seed
-        logger.info("MCBattery.simulate master_seed=%d", seed)
+        shards = _shard_ranges(cfgs)
+        logger.info(
+            "MCBattery.simulate master_seed=%d shards=%d simulations=%d",
+            seed, len(shards), sum(c.number_simulations for c in cfgs),
+        )
 
-        df = self._trace_frame(spark, list(models), cfgs, seed, trace_dtype)
+        df = self._trace_frame(spark, list(models), cfgs, shards, seed, trace_dtype)
 
         # Working output_paths cache (documented reference semantics,
         # notebook cell 35; the reference's implementation clobbers it).
@@ -156,15 +173,10 @@ class MCBattery:
         spark: SparkSession,
         models: list[Callable],
         cfgs: list[SimulationConfig],
+        shards: list[tuple[int, int, int]],
         master_seed: int,
         trace_dtype: str,
     ) -> DataFrame:
-        shards: list[tuple[int, int, int]] = []
-        for model_id, cfg in enumerate(cfgs):
-            n, bs = cfg.number_simulations, cfg.batch_size
-            for b in range(math.ceil(n / bs)):
-                shards.append((model_id, b * bs, min((b + 1) * bs, n)))
-
         shard_df = spark.createDataFrame(
             shards, schema="model_id long, sim_lo long, sim_hi long"
         ).repartition(max(len(shards), spark.sparkContext.defaultParallelism))
@@ -188,8 +200,8 @@ class MCBattery:
                     model = models[model_id]
                     number_points, parameters, starting_point = cfg_by_model[model_id]
                     sim_ids, traces = [], []
-                    for sim_id in range(sim_lo, sim_hi):
-                        rng = rng_for(bit_gen_cls, master_seed, model_id, sim_id)
+                    rngs = shard_rngs(bit_gen_cls, master_seed, model_id, sim_lo, sim_hi)
+                    for sim_id, rng in zip(range(sim_lo, sim_hi), rngs):
                         trace = _call_model(
                             model, number_points, rng, parameters, starting_point
                         )

@@ -50,7 +50,7 @@ class BatteryConfigs(BaseModel):
     """
 
     rng: str = DEFAULT_RNG
-    master_seed: Optional[int] = None
+    master_seed: Optional[int] = Field(default=None, ge=0)
     spark_conf: dict = Field(default_factory=dict)
 
     if _PYDANTIC_V2:

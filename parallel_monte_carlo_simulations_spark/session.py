@@ -14,6 +14,8 @@ memory/executor settings change, which callers pass through
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
 
@@ -41,12 +43,20 @@ DEFAULT_CONF: dict[str, str] = {
     # which has already imported numpy, pandas, pyarrow, the worker and
     # this package, so a task pays the fork (~80 ms) and the unpickling
     # of its function, not the 0.6-1.6 s of imports per task measured
-    # on a 4-core box with the stock daemon.
+    # on a 4-core box with the stock daemon. The daemon also drops its
+    # cached zip finders before forking: every task calls
+    # importlib.invalidate_caches(), which made each cached finder
+    # re-read its archive's directory (180-270 ms per task for
+    # pyspark.zip, py4j's zip and their sub-packages). What a task
+    # still pays is the fork, the worker's handshake and the unpickling
+    # of its function, plus any import the daemon did not do: ~40 ms of
+    # worker init per MCBattery task on a 4-core box, against ~300 ms
+    # with the zip finders kept.
     "spark.python.worker.reuse": "false",
     # Executors start their Python daemon as `python -m <this module>`
     # (the __main__ block at the end of this file). On a cluster the
     # executors must therefore be able to import this package; they
-    # already must, to unpickle MCBattery's closure (rng_for and
+    # already must, to unpickle MCBattery's closure (shard_rngs and
     # _call_model are pickled by reference).
     "spark.python.daemon.module": __name__,
     # events.parquet carries TIMESTAMP(NANOS), which the Spark parquet
@@ -134,6 +144,17 @@ def get_spark(
     return builder.getOrCreate()
 
 
+def _drop_zip_finders() -> None:
+    """Remove every cached ``zipimporter`` from ``sys.path_importer_cache``.
+
+    ``importlib.invalidate_caches()`` makes each cached zip finder re-read
+    its archive's whole directory; a finder built later for the same
+    archive reuses zipimport's directory cache instead."""
+    for path, finder in list(sys.path_importer_cache.items()):
+        if isinstance(finder, zipimport.zipimporter):
+            del sys.path_importer_cache[path]
+
+
 if __name__ == "__main__":
     # Python daemon entry (DEFAULT_CONF["spark.python.daemon.module"]):
     # import the worker stack once, then fork every worker from here.
@@ -146,4 +167,5 @@ if __name__ == "__main__":
 
     from .mc import battery  # noqa: F401
 
+    _drop_zip_finders()
     daemon.manager()

@@ -329,3 +329,62 @@ def test_missing_table_raises_path_not_found(spark, tmp_path):
     with pytest.raises(AnalysisException) as err:
         table(spark, str(tmp_path), "region")
     assert err.value.getCondition() == "PATH_NOT_FOUND"
+
+
+# -- the Python daemon's zip-finder purge (session._drop_zip_finders) ---------
+
+
+def test_dropping_zip_finders_keeps_zip_imports_working(tmp_path):
+    import sys
+    import zipfile
+    import zipimport
+
+    from parallel_monte_carlo_simulations_spark.session import _drop_zip_finders
+
+    archive = tmp_path / "pmcs_zipped.zip"
+    with zipfile.ZipFile(archive, "w") as zf:
+        zf.writestr("pmcs_zipped_a.py", "VALUE = 'a'\n")
+        zf.writestr("pmcs_zipped_b.py", "VALUE = 'b'\n")
+    saved_path, saved_cache = list(sys.path), dict(sys.path_importer_cache)
+    sys.path.insert(0, str(archive))
+    try:
+        import pmcs_zipped_a
+
+        assert pmcs_zipped_a.VALUE == "a"
+        assert isinstance(sys.path_importer_cache[str(archive)], zipimport.zipimporter)
+        _drop_zip_finders()
+        assert not any(
+            isinstance(f, zipimport.zipimporter) for f in sys.path_importer_cache.values()
+        )
+        import pmcs_zipped_b
+
+        assert pmcs_zipped_b.VALUE == "b"
+    finally:
+        sys.path[:] = saved_path
+        sys.path_importer_cache.clear()
+        sys.path_importer_cache.update(saved_cache)
+        sys.modules.pop("pmcs_zipped_a", None)
+        sys.modules.pop("pmcs_zipped_b", None)
+
+
+def test_forked_python_tasks_start_without_zip_finders(spark):
+    """The daemon drops its zip finders before forking, so a task's
+    ``importlib.invalidate_caches()`` has no zip directory to re-read."""
+
+    def task(batches):
+        import sys
+        import zipimport
+
+        import pandas as pd
+
+        zipped = sorted(
+            path
+            for path, finder in sys.path_importer_cache.items()
+            if isinstance(finder, zipimport.zipimporter)
+        )
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"zipped": [zipped]})
+
+    rows = spark.range(2, numPartitions=2).mapInPandas(task, "zipped array<string>").collect()
+    assert [list(r.zipped) for r in rows] == [[], []]

@@ -3,6 +3,7 @@ semantics, determinism, statistical properties, config validation."""
 
 from __future__ import annotations
 
+import logging
 import math
 import os
 
@@ -172,10 +173,52 @@ def test_validation_errors():
         battery.simulate([coin, coin], [{"number_simulations": 1, "number_points": 1}])
 
 
+def test_negative_master_seed_rejected_before_any_job(spark):
+    # SeedSequence rejects negative entropy only inside a Spark task; both
+    # ways of giving a master seed must fail before any job starts.
+    sc = spark.sparkContext
+    group = "negative-master-seed"
+    sc.setJobGroup(group, "simulate with a negative master seed")
+    try:
+        with pytest.raises(ValueError, match="master_seed"):
+            MCBattery({"master_seed": -1})
+        with pytest.raises(ValueError, match="master_seed"):
+            MCBattery({"rng": "Philox"}).simulate(
+                [coin],
+                [{"number_simulations": 4, "number_points": 2}],
+                spark=spark,
+                master_seed=-3,
+            ).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
+def test_simulate_logs_shard_and_simulation_counts(spark, caplog):
+    caplog.set_level(logging.INFO, logger="parallel_monte_carlo_simulations_spark.mc.battery")
+    MCBattery({"master_seed": 5}).simulate(
+        [coin, coin],
+        [
+            {"number_simulations": 25, "number_points": 2, "batch_size": 10},
+            {"number_simulations": 7, "number_points": 2},
+        ],
+        spark=spark,
+    )
+    assert "MCBattery.simulate master_seed=5 shards=4 simulations=32" in caplog.messages
+
+
 def test_rng_allowlist_matches_reference():
     # reference models.py:16-33 — same four families, same default
     assert set(RNG_MAPPING) == {"PCG64", "Philox", "SFC64", "MT19937"}
     assert BatteryConfigs().rng == "PCG64"
+
+
+def test_state_request_covers_rng_allowlist():
+    # shard_rngs has no fallback: every allowlisted bit generator needs
+    # its generate_state request pinned
+    from parallel_monte_carlo_simulations_spark.mc.seeds import STATE_REQUEST
+
+    assert set(STATE_REQUEST) == set(RNG_MAPPING.values())
 
 
 def test_vectorized_model_equals_loop_model(spark):

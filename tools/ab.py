@@ -11,6 +11,9 @@ The summary on stdout gives, for every end-to-end metric in NEW_TREE's
 ``BENCHMARK.json``, each side's median and quartiles, the median gain
 (old over new, oriented so that > 1 means the new tree is better), and how
 many pairs each side won; then each side's failed and attempted operations.
+The exit status is 1 if any run reports a wrong result (``correct`` false
+or a failed operation), so a scripted A/B cannot pass over a tree that
+gives wrong answers.
 
 All measuring is ``perfbench/run.py``'s; this script only runs it and
 summarises what it prints.
@@ -97,6 +100,10 @@ def main(argv=None) -> int:
                   file=sys.stderr, flush=True)
     print(f"{args.workload}: {args.pairs} pairs, seeds {args.seed0}..{args.seed0 + args.pairs - 1}")
     print(summarise(runs, better))
+    wrong = sum(not r["correct"] or r["failed"] > 0 for side in runs.values() for r in side)
+    if wrong:
+        print(f"{wrong} run(s) reported wrong results", file=sys.stderr)
+        return 1
     return 0
 
 
