@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .microunit import qunits_col, rdiv_halfup_duck, rdiv_halfup_expr
+from .microunit import rdiv_halfup_duck, rdiv_halfup_expr, units_col
 from ..registry import register
 from ..tables import table
 
@@ -151,7 +151,7 @@ def q_text_bigram_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
             # quantizes identically in both engines, the BIGINT sum is
             # order-independent, and the string-form division renders
             # the 4-dec average (raw-double sum was the q05 flip class)
-            F.sum(qunits_col(F.col("lp"), 8)).alias("s_u8"),
+            F.sum(units_col(F.col("lp"), 8)).alias("s_u8"),
         )
         .select(
             "doc_id",

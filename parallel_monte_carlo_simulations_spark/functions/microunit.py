@@ -46,6 +46,13 @@ Two tools, used by every micro-unit site:
     ``SUM(micro_units)/10^k`` site: operators/closeness.py,
     similarity/irmetrics.py (static bound — see the module asserts
     there), operators/survival.py.
+
+Beside them sit the two floor-form quantizations, one helper per form
+and engine: ``units_sql`` / ``units_col`` turn a double into exact
+BIGINT units of 10^-k (the element-wise step before a cross-row SUM),
+and ``qround_col`` / ``qround_duck`` round an irreducibly-double result
+to k places. Both engines evaluate the identical IEEE multiply, add and
+FLOOR, so each form is bit-equal cross-engine by construction.
 """
 
 from __future__ import annotations
@@ -190,7 +197,12 @@ def rdiv_halfup_duck(num: str, den: str, digits: int = 4) -> str:
     )
 
 
-def qround_expr(col_sql: str, digits: int) -> Column:
+def qround_duck(col_sql: str, digits: int) -> str:
+    """DuckDB SQL text for the identical floor-form quantization."""
+    return f"(FLOOR(({col_sql}) * 1e{digits} + 0.5) / 1e{digits})"
+
+
+def qround_col(col: Column, digits: int) -> Column:
     """Spark Column: shared floor-form half-up quantization of an
     IRREDUCIBLY-DOUBLE expression (transcendental math, EWMA weights,
     variance-family outputs) to ``digits`` places —
@@ -207,40 +219,11 @@ def qround_expr(col_sql: str, digits: int) -> Column:
     an identical double). Ties round toward +inf (floor(+0.5) form) in
     both engines alike. Contract: |x| * 10^digits < 2^53 (Spark's FLOOR
     returns BIGINT; beyond 2^53 its exactness differs from DuckDB's
-    double FLOOR). The scale literal is written in scientific notation
-    (1e4) so BOTH engines type it DOUBLE — DuckDB parses `10000.0` as
-    DECIMAL and would evaluate a different (and overflow-prone) op."""
-    return F.expr(f"floor(({col_sql}) * 1e{digits} + 0.5) / 1e{digits}")
-
-
-def qround_duck(col_sql: str, digits: int) -> str:
-    """DuckDB SQL text for the identical floor-form quantization."""
-    return f"(FLOOR(({col_sql}) * 1e{digits} + 0.5) / 1e{digits})"
-
-
-def qround_col(col: Column, digits: int) -> Column:
-    """DataFrame-API twin of :func:`qround_expr` for Column inputs."""
+    double FLOOR). The scale is a DOUBLE literal on both sides
+    (:func:`qround_duck` writes it as 1e4: DuckDB parses `10000.0` as
+    DECIMAL and would evaluate a different, overflow-prone op)."""
     s = F.lit(float(10**digits))
     return F.floor(col * s + F.lit(0.5)) / s
-
-
-def qunits_sql(col_sql: str, decimals: int) -> str:
-    """Shared SQL text (both dialects): floor-form quantization of an
-    IRREDUCIBLY-DOUBLE expression to exact BIGINT units of
-    10^-decimals — the element-wise step that makes a cross-row SUM of
-    computed doubles order-independent (raw-double sums are the class
-    that flipped q05 at sf1.0). Both engines evaluate the identical
-    IEEE multiply+add+floor on the identical input double, so the unit
-    value is bit-equal by construction; the BIGINT sum is then exact.
-    Contract: |x| * 10^decimals < 2^53."""
-    return f"CAST(FLOOR(({col_sql}) * 1e{decimals} + 0.5) AS BIGINT)"
-
-
-def qunits_col(col: Column, decimals: int) -> Column:
-    """DataFrame-API twin of :func:`qunits_sql`."""
-    return F.floor(col * F.lit(float(10**decimals)) + F.lit(0.5)).cast(
-        "long"
-    )
 
 
 def units_sql(col_sql: str, decimals: int) -> str:
@@ -255,7 +238,7 @@ def units_sql(col_sql: str, decimals: int) -> str:
     at any sign (a true .5 tie cannot occur under the contract).
 
     r13 optimization round: converted from ``ROUND((x) * s, 0)`` to the
-    floor form the ``qunits_*`` twins always used. Spark's ROUND on a
+    floor form ``units_col`` always used. Spark's ROUND on a
     double allocates a java.math.BigDecimal PER ROW (measured ~40% of
     q01's runtime); the floor form is pure double codegen and makes the
     cross-engine claim stronger — both engines now evaluate the SAME

@@ -33,15 +33,13 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..registry import register
-from .lsmc import (
-    N_STRATA,
-    _lit,
-    _quant,
-    _radical_inverse,
-    _stratum_means,
+from .shared_sql import (
+    lit,
+    normal_case,
+    quant,
+    radical_inverse,
+    range_rows,
+    register_sql,
 )
 
 N_PATHS = 8192
@@ -51,39 +49,28 @@ T = 1.0
 _BASES_DIGITS = ((2, 13), (3, 9), (5, 6), (7, 5))  # cover N_PATHS=8192
 
 
-def _z_case(u_expr: str) -> str:
-    """Stratified standard normal from a uniform: stratum = floor(u*K),
-    value = the stratum's conditional mean (literal)."""
-    whens = " ".join(
-        f"WHEN {j} THEN {_lit(q)}" for j, q in enumerate(_stratum_means(N_STRATA))
-    )
-    return (
-        f"(CASE CAST(FLOOR({u_expr} * {N_STRATA}) AS INTEGER) {whens} END)"
-    )
-
-
-def bridge_body() -> str:
-    """Shared SQL text over an ``idx(i)`` CTE."""
+def _sql(duck: bool) -> str:
     zs = {
-        t + 1: _z_case(_radical_inverse("i + 1", b, d))
+        t + 1: normal_case(radical_inverse("i + 1", b, d))
         for t, (b, d) in enumerate(_BASES_DIGITS)
     }
     # bridge levels (times T/4 .. T), built as chained CTE columns
-    w_t = f"({_lit(math.sqrt(T))} * z1)"
-    w_half = f"(wT / 2.0e0 + {_lit(math.sqrt(T / 4))} * z2)"
-    w_q1 = f"(wH / 2.0e0 + {_lit(math.sqrt(T / 8))} * z3)"
-    w_q3 = f"((wH + wT) / 2.0e0 + {_lit(math.sqrt(T / 8))} * z4)"
+    w_t = f"({lit(math.sqrt(T))} * z1)"
+    w_half = f"(wT / 2.0e0 + {lit(math.sqrt(T / 4))} * z2)"
+    w_q1 = f"(wH / 2.0e0 + {lit(math.sqrt(T / 8))} * z3)"
+    w_q3 = f"((wH + wT) / 2.0e0 + {lit(math.sqrt(T / 8))} * z4)"
 
     def spot(w: str, t: float) -> str:
         drift = (RATE - 0.5 * SIGMA * SIGMA) * t
-        return f"({_lit(S0)} * EXP({_lit(drift)} + {_lit(SIGMA)} * {w}))"
+        return f"({lit(S0)} * EXP({lit(drift)} + {lit(SIGMA)} * {w}))"
 
     s1, s2 = spot("wQ1", T / 4), spot("wH", T / 2)
     s3, s4 = spot("wQ3", 3 * T / 4), spot("wT", T)
     avg_s = f"(({s1} + {s2} + {s3} + {s4}) / 4.0e0)"
-    payoff = f"GREATEST({avg_s} - {_lit(STRIKE)}, 0.0e0)"
-    disc = _lit(math.exp(-RATE * T))
-    return f"""WITH zcols AS (
+    payoff = f"GREATEST({avg_s} - {lit(STRIKE)}, 0.0e0)"
+    disc = lit(math.exp(-RATE * T))
+    return f"""WITH idx AS ({range_rows("i", 0, N_PATHS, duck)}),
+zcols AS (
   SELECT i, {zs[1]} AS z1, {zs[2]} AS z2, {zs[3]} AS z3, {zs[4]} AS z4
   FROM idx
 ),
@@ -91,32 +78,16 @@ w1 AS (SELECT *, {w_t} AS wT FROM zcols),
 w2 AS (SELECT *, {w_half} AS wH FROM w1),
 w3 AS (SELECT *, {w_q1} AS wQ1, {w_q3} AS wQ3 FROM w2)
 SELECT CAST(COUNT(*) AS BIGINT) AS n_paths,
-       {_quant(f"AVG({s4})", 10_000)} AS mean_terminal,
-       {_quant(f"{disc} * AVG({payoff})", 10_000)} AS asian_call_price
+       {quant(f"AVG({s4})", 10_000)} AS mean_terminal,
+       {quant(f"{disc} * AVG({payoff})", 10_000)} AS asian_call_price
 FROM w3"""
 
 
-def _oracle() -> str:
-    body = bridge_body().replace(" DIV ", " // ")
-    return (
-        f"WITH idx AS (SELECT unnest(range(0, {N_PATHS})) AS i)\n, "
-        + body[len("WITH ") :]
-    )
-
-
-@register(
+q_mc_brownian_bridge = register_sql(
     "q_mc_brownian_bridge",
-    oracle=_oracle(),
-    description=(
-        "Brownian-bridge QMC: bisection path construction (terminal "
-        "first, conditional midpoints after) pricing an arithmetic "
-        "Asian call — exactly oracled via the shared-SQL discipline"
-    ),
-    tags=("mc", "qmc", "brownian_bridge", "finance", "deterministic"),
+    _sql,
+    "Brownian-bridge QMC: bisection path construction (terminal "
+    "first, conditional midpoints after) pricing an arithmetic "
+    "Asian call — exactly oracled via the shared-SQL discipline",
+    ("mc", "qmc", "brownian_bridge", "finance", "deterministic"),
 )
-def q_mc_brownian_bridge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    body = bridge_body()
-    return spark.sql(
-        f"WITH idx AS (SELECT id AS i FROM range({N_PATHS}))\n, "
-        + body[len("WITH ") :]
-    )

@@ -19,17 +19,14 @@ partitionable at any scale, like the production counter RNGs used for
 exactly this reason.
 
 Normal increments are discretized through the 8-stratum conditional
-means (the lsmc.py construction); running path sums use an ORDER BY t
+means (``shared_sql.normal_case``); running path sums use an ORDER BY t
 window (sequential left fold -> engine-identical), and the 0/1 coin
 sums are exact integers in double, so AVG is order-independent.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..registry import register
-from .lsmc import N_STRATA, _lit, _quant, _stratum_means
+from .shared_sql import lit, normal_case, quant, range_rows, register_sql
 
 N_SIMS = 200
 N_STEPS = 50
@@ -54,32 +51,18 @@ def _u01(tag: str, keys: list[str], duck: bool) -> str:
     cast = "VARCHAR" if duck else "STRING"
     parts = ", ':', ".join(f"CAST({k} AS {cast})" for k in keys)
     h = _hash60(f"CONCAT('{tag}:', {parts})", duck)
-    return f"({h} / {_lit(_TWO60)})"
-
-
-def _stratum_case(u: str) -> str:
-    whens = " ".join(
-        f"WHEN {j} THEN {_lit(q)}"
-        for j, q in enumerate(_stratum_means(N_STRATA))
-    )
-    return f"(CASE CAST(FLOOR({u} * {N_STRATA}) AS INTEGER) {whens} END)"
+    return f"({h} / {lit(_TWO60)})"
 
 
 def _walk_sql(duck: bool) -> str:
-    inc = _stratum_case(_u01("walk", ["s", "t"], duck))
-    if duck:
-        sims = f"SELECT unnest(range(0, {N_SIMS})) AS s"
-        steps = f"SELECT unnest(range(0, {N_STEPS})) AS t"
-    else:
-        sims = f"SELECT id AS s FROM range(0, {N_SIMS})"
-        steps = f"SELECT id AS t FROM range(0, {N_STEPS})"
+    inc = normal_case(_u01("walk", ["s", "t"], duck))
     return f"""
-WITH sims AS ({sims}),
-steps AS ({steps}),
+WITH sims AS ({range_rows("s", 0, N_SIMS, duck)}),
+steps AS ({range_rows("t", 0, N_STEPS, duck)}),
 grid AS (SELECT s, t, {inc} AS inc FROM sims CROSS JOIN steps),
 paths AS (
   SELECT s, t,
-         {_lit(START)} + SUM(inc) OVER (
+         {lit(START)} + SUM(inc) OVER (
            PARTITION BY s ORDER BY t
            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
          ) AS v
@@ -94,43 +77,33 @@ dd AS (
   FROM paths
 )
 SELECT CAST(s AS BIGINT) AS sim_id,
-       {_quant("MAX(drawdown)")} AS max_drawdown
+       {quant("MAX(drawdown)")} AS max_drawdown
 FROM dd
 GROUP BY s
 """
 
 
-@register(
+q_mc_walk_drawdown_qmc = register_sql(
     "q_mc_walk_drawdown_qmc",
-    oracle=_walk_sql(duck=True),
-    description=(
-        "exactly-oracled twin of q_mc_walk_drawdown: counter-hash RNG "
-        "random walks (stateless (sim, step) grid), max drawdown via "
-        "running-max window — every path value hash-verified"
-    ),
-    tags=("mc", "hashrng", "window", "analytics", "deterministic"),
+    _walk_sql,
+    "exactly-oracled twin of q_mc_walk_drawdown: counter-hash RNG "
+    "random walks (stateless (sim, step) grid), max drawdown via "
+    "running-max window — every path value hash-verified",
+    ("mc", "hashrng", "window", "analytics", "deterministic"),
 )
-def q_mc_walk_drawdown_qmc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_walk_sql(duck=False))
 
 
 def _coin_sql(duck: bool) -> str:
     u = _u01("coin", ["m", "s", "p"], duck)
-    bias = " ".join(f"WHEN {m} THEN {_lit(b)}" for m, b, _ in COIN_MODELS)
+    bias = " ".join(f"WHEN {m} THEN {lit(b)}" for m, b, _ in COIN_MODELS)
     lens = " OR ".join(f"(m = {m} AND p < {n})" for m, _, n in COIN_MODELS)
     models = ", ".join(str(m) for m, _, _ in COIN_MODELS)
-    if duck:
-        ms = f"SELECT unnest([{models}]) AS m"
-        sims = f"SELECT unnest(range(0, {COIN_SIMS})) AS s"
-        pos = f"SELECT unnest(range(0, {max(n for _, _, n in COIN_MODELS)})) AS p"
-    else:
-        ms = f"SELECT explode(array({models})) AS m"
-        sims = f"SELECT id AS s FROM range(0, {COIN_SIMS})"
-        pos = f"SELECT id AS p FROM range(0, {max(n for _, _, n in COIN_MODELS)})"
+    ms = f"unnest([{models}])" if duck else f"explode(array({models}))"
+    n_pos = max(n for _, _, n in COIN_MODELS)
     return f"""
-WITH models AS ({ms}),
-sims AS ({sims}),
-pos AS ({pos}),
+WITH models AS (SELECT {ms} AS m),
+sims AS ({range_rows("s", 0, COIN_SIMS, duck)}),
+pos AS ({range_rows("p", 0, n_pos, duck)}),
 grid AS (
   SELECT m, s, p FROM models CROSS JOIN sims CROSS JOIN pos
   WHERE {lens}
@@ -142,23 +115,19 @@ flips AS (
 )
 SELECT CAST(m AS INTEGER) AS model_id,
        CAST(p AS INTEGER) AS position,
-       {_quant("AVG(h)", 10_000)} AS h_frequency,
+       {quant("AVG(h)", 10_000)} AS h_frequency,
        CAST(COUNT(*) AS BIGINT) AS n_obs
 FROM flips
 GROUP BY m, p
 """
 
 
-@register(
+q_mc_heads_frequency_qmc = register_sql(
     "q_mc_heads_frequency_qmc",
-    oracle=_coin_sql(duck=True),
-    description=(
-        "exactly-oracled twin of q_mc_heads_frequency: counter-hash coin "
-        "flips for the reference's two demo models, per-position heads "
-        "frequency (0/1 sums are exact in double, so AVG is "
-        "order-independent)"
-    ),
-    tags=("mc", "hashrng", "aggregate", "deterministic"),
+    _coin_sql,
+    "exactly-oracled twin of q_mc_heads_frequency: counter-hash coin "
+    "flips for the reference's two demo models, per-position heads "
+    "frequency (0/1 sums are exact in double, so AVG is "
+    "order-independent)",
+    ("mc", "hashrng", "aggregate", "deterministic"),
 )
-def q_mc_heads_frequency_qmc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_coin_sql(duck=False))

@@ -18,9 +18,11 @@ replayable:
   literal-product doubles, bit-identical cross-engine.
 - **One SQL text, two engines**: the whole unrolled computation (path
   CTE, three regression CTEs, Cramer 3x3 solves, nested exercise
-  decisions) is generated ONCE and executed by ``spark.sql`` and DuckDB
-  (modulo the integer-division spelling), so expression association is
-  identical by construction.
+  decisions) is generated ONCE by ``lsmc_sql`` and executed by
+  ``spark.sql`` and DuckDB (``shared_sql`` writes each engine's range
+  source and integer division), so expression association is identical
+  by construction. ``paths_sql``, the path grid, is shared with
+  ``qmc_barrier.py``.
 - **Moment quantization**: aggregate SUMs are the one place engines
   differ (summation order → last-ulp drift). Every regression moment is
   quantized with ``floor(x*10^6 + 0.5)/10^6`` BEFORE the solve, so the
@@ -45,85 +47,52 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 
 from ..registry import register
+from .shared_sql import (
+    N_STRATA,
+    case_over,
+    lit,
+    oracle,
+    quant,
+    radical_inverse,
+    range_rows,
+)
+from .shared_sql import stratum_means as _stratum_means
 
 N_PATHS = 4096
-N_STRATA = 8
 S0, STRIKE = 100.0, 105.0
 RATE, SIGMA = 0.04, 0.30
 N_DATES, DT = 4, 0.25  # quarterly exercise over one year
 _BASES_DIGITS = ((2, 12), (3, 8), (5, 6), (7, 5))  # cover N_PATHS=4096
 
-
-def _lit(x: float) -> str:
-    """Float literal that parses as DOUBLE in BOTH engines: DuckDB types
-    bare decimal literals as DECIMAL (whose scale explodes under the
-    multiplier product chains); an exponent suffix forces DOUBLE in both
-    dialects while repr keeps full precision."""
-    s = repr(float(x))
-    return s if ("e" in s or "E" in s or "inf" in s or "nan" in s) else s + "e0"
-
-
-def _phi(z: float) -> float:
-    return math.exp(-0.5 * z * z) / math.sqrt(2.0 * math.pi)
+# Per-step gross returns over the stratum index: literal multipliers
+# exp((r - sigma^2/2) dt + sigma sqrt(dt) E[Z|stratum]).
+_MULTIPLIERS = [
+    lit(math.exp((RATE - 0.5 * SIGMA * SIGMA) * DT + SIGMA * math.sqrt(DT) * q))
+    for q in _stratum_means(N_STRATA)
+]
+_DISC = lit(math.exp(-RATE * DT))
 
 
-def _norm_cdf(z: float) -> float:
-    return 0.5 * (1.0 + math.erf(z / math.sqrt(2.0)))
-
-
-def _norm_ppf(p: float) -> float:
-    """Inverse normal CDF by bisection on erf — literals are computed
-    once at import; 200 iterations pins the double exactly."""
-    lo, hi = -40.0, 40.0
-    for _ in range(200):
-        mid = 0.5 * (lo + hi)
-        if _norm_cdf(mid) < p:
-            lo = mid
-        else:
-            hi = mid
-    return 0.5 * (lo + hi)
-
-
-def _stratum_means(k: int) -> list[float]:
-    """E[Z | stratum j] for k equiprobable strata of the standard
-    normal: (phi(z_j) - phi(z_{j+1})) * k on stratum (z_j, z_{j+1}]."""
-    edges = [-math.inf] + [_norm_ppf(j / k) for j in range(1, k)] + [math.inf]
-    means = []
-    for j in range(k):
-        lo, hi = edges[j], edges[j + 1]
-        plo = 0.0 if math.isinf(lo) else _phi(lo)
-        phi_ = 0.0 if math.isinf(hi) else _phi(hi)
-        means.append((plo - phi_) * k)
-    return means
-
-
-def _radical_inverse(i: str, base: int, digits: int) -> str:
-    terms = [
-        f"((({i}) DIV {base ** k}) % {base}) * {_lit(base ** -(k + 1))}"
-        for k in range(digits)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _quant(expr: str, scale: int = 1_000_000) -> str:
-    """floor-based half-up quantization — identical IEEE path in both
-    engines (ROUND() tie semantics differ; see operators/interp.py)."""
-    return f"(FLOOR(({expr}) * {scale} + 0.5e0) / {scale})"
-
-
-def _multiplier_case(k_col: str) -> str:
-    """Per-step gross return CASE over the stratum index: literal
-    multipliers exp((r - sigma^2/2) dt + sigma sqrt(dt) E[Z|stratum])."""
-    drift = (RATE - 0.5 * SIGMA * SIGMA) * DT
-    vol = SIGMA * math.sqrt(DT)
-    whens = " ".join(
-        f"WHEN {j} THEN {_lit(math.exp(drift + vol * q))}"
-        for j, q in enumerate(_stratum_means(N_STRATA))
+def paths_sql(duck: bool, parts: int | None = None) -> str:
+    """The quarterly path grid (CTEs ``idx``, ``ks``, ``sp1`` ..
+    ``sp{N_DATES}``; the last carries spots ``s1`` .. ``s{N_DATES}``).
+    Per-date uniforms, strata and spots; parenthesized left-to-right
+    products pin multiplication association."""
+    ks_cols = ", ".join(
+        f"CAST(FLOOR({radical_inverse('i + 1', b, d)} * {N_STRATA}) AS INTEGER)"
+        f" AS k{t + 1}"
+        for t, (b, d) in enumerate(_BASES_DIGITS)
     )
-    return f"(CASE {k_col} {whens} END)"
-
-
-_DISC = _lit(math.exp(-RATE * DT))
+    spots = ",\n".join(
+        f"sp{t} AS (SELECT *, ({lit(S0) if t == 1 else f's{t - 1}'} * "
+        f"{case_over(f'k{t}', _MULTIPLIERS)}) AS s{t} "
+        f"FROM {'ks' if t == 1 else f'sp{t - 1}'})"
+        for t in range(1, N_DATES + 1)
+    )
+    return (
+        f"WITH idx AS ({range_rows('i', 0, N_PATHS, duck, parts)}),\n"
+        f"ks AS (SELECT i, {ks_cols} FROM idx),\n{spots}"
+    )
 
 
 def _cramer(pfx: str) -> str:
@@ -159,7 +128,7 @@ def _cramer(pfx: str) -> str:
 def _moments(x: str, y: str) -> str:
     """Quantized regression moments of (x, y) — see module docstring."""
     return ", ".join(
-        f"{_quant(agg)} AS {name}"
+        f"{quant(agg)} AS {name}"
         for name, agg in (
             ("n", "SUM(1.0e0)"),
             ("sx", f"SUM({x})"),
@@ -173,18 +142,10 @@ def _moments(x: str, y: str) -> str:
     )
 
 
-def lsmc_body() -> str:
-    """The shared SQL text (everything after the engine-specific path
-    index CTE, which must provide ``idx(i)``)."""
-    # Per-date uniforms, strata and spots; parenthesized left-to-right
-    # products pin multiplication association.
-    u = {
-        t + 1: _radical_inverse("i + 1", b, d)
-        for t, (b, d) in enumerate(_BASES_DIGITS)
-    }
-    k = {t: f"CAST(FLOOR({u[t]} * {N_STRATA}) AS INTEGER)" for t in u}
-    pay = {t: f"GREATEST({_lit(STRIKE)} - s{t}, 0.0e0)" for t in range(1, N_DATES + 1)}
-    xs = {t: f"(s{t} / {_lit(S0)})" for t in range(1, N_DATES + 1)}
+def lsmc_sql(duck: bool, parts: int | None = None) -> str:
+    """The shared SQL text: the path grid, three regressions, pricing."""
+    pay = {t: f"GREATEST({lit(STRIKE)} - s{t}, 0.0e0)" for t in range(1, N_DATES + 1)}
+    xs = {t: f"(s{t} / {lit(S0)})" for t in range(1, N_DATES + 1)}
 
     # value-at-date expressions, built backward. v4 is intrinsic at
     # expiry; v_t for t<4 needs the co{t} coefficients in scope.
@@ -198,17 +159,7 @@ def lsmc_body() -> str:
             f"THEN {pay[t]} ELSE {_DISC} * {v[t + 1]} END)"
         )
 
-    ks_cols = ", ".join(f"{k[t]} AS k{t}" for t in range(1, N_DATES + 1))
-    spot_ctes = []
-    prev = "ks"
-    for t in range(1, N_DATES + 1):
-        base = _lit(S0) if t == 1 else f"s{t - 1}"
-        spot_ctes.append(
-            f"sp{t} AS (SELECT *, ({base} * {_multiplier_case(f'k{t}')}) AS s{t} "
-            f"FROM {prev})"
-        )
-        prev = f"sp{t}"
-
+    last = f"sp{N_DATES}"
     reg_ctes = []
     co_scope = []  # coefficient CTEs already defined, cross-joined in
     for t in range(N_DATES - 1, 0, -1):
@@ -216,33 +167,27 @@ def lsmc_body() -> str:
         y = f"{_DISC} * {v[t + 1]}"
         reg_ctes.append(
             f"reg{t} AS (SELECT {_moments(xs[t], y)} "
-            f"FROM {prev}{scope} WHERE {pay[t]} > 0.0e0)"
+            f"FROM {last}{scope} WHERE {pay[t]} > 0.0e0)"
         )
         reg_ctes.append(f"co{t} AS ({_cramer(f'co{t}')} FROM reg{t})")
         co_scope.append(t)
 
     scope_all = "".join(f", co{u_}" for u_ in co_scope)
-    euro = f"{_lit(math.exp(-RATE * DT * N_DATES))} * AVG({pay[N_DATES]})"
+    euro = f"{lit(math.exp(-RATE * DT * N_DATES))} * AVG({pay[N_DATES]})"
     return (
-        f"WITH ks AS (SELECT i, {ks_cols} FROM idx),\n"
-        + ",\n".join(spot_ctes)
+        paths_sql(duck, parts)
         + ",\n"
         + ",\n".join(reg_ctes)
         + f"\nSELECT CAST(COUNT(*) AS BIGINT) AS n_paths, "
-        f"{_quant(f'{_DISC} * AVG({v[1]})', 10_000)} AS am_price, "
-        f"{_quant(euro, 10_000)} AS eu_price "
-        f"FROM {prev}{scope_all}"
+        f"{quant(f'{_DISC} * AVG({v[1]})', 10_000)} AS am_price, "
+        f"{quant(euro, 10_000)} AS eu_price "
+        f"FROM {last}{scope_all}"
     )
-
-
-def _oracle() -> str:
-    body = lsmc_body().replace(" DIV ", " // ")
-    return f"WITH idx AS (SELECT unnest(range(0, {N_PATHS})) AS i)\n, " + body[len("WITH ") :]
 
 
 @register(
     "q_mc_american_lsmc",
-    oracle=_oracle(),
+    oracle=oracle(lsmc_sql),
     description=(
         "Longstaff-Schwartz American put on quasi-random GBM paths: "
         "3 backward-induction regressions (Cramer-solved, moment-"
@@ -251,7 +196,6 @@ def _oracle() -> str:
     tags=("mc", "qmc", "lsmc", "finance", "iterative", "deterministic"),
 )
 def q_mc_american_lsmc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    body = lsmc_body()
     # r13 (guide §2.2): size the path-source partitions to the problem,
     # not the core count. The plan re-derives the 4096-path subtree for
     # each of the 3 regression aggregates plus the final pricing pass;
@@ -260,13 +204,10 @@ def q_mc_american_lsmc(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pure scheduling overhead. 512+ paths per task keeps the arithmetic
     # vectorizable and the stage at most defaultParallelism wide —
     # N_PATHS is an algorithm constant, so this is problem-adaptive at
-    # every deployment size. (The oracle's idx CTE is engine-specific
-    # already; the shared body is untouched. Partition count only
-    # changes double-sum order inside the 1e-6-quantized moments — the
-    # same accepted variation as the driver's local[8] vs the bench's
-    # local[32].)
+    # every deployment size. (Only the Spark range source carries the
+    # count, so this is the one family query that builds its text per
+    # session. Partition count only changes double-sum order inside the
+    # 1e-6-quantized moments — the same accepted variation as the
+    # driver's local[8] vs the bench's local[32].)
     parts = max(1, min(spark.sparkContext.defaultParallelism, N_PATHS // 512))
-    return spark.sql(
-        f"WITH idx AS (SELECT id AS i FROM range(0, {N_PATHS}, 1, {parts}))\n, "
-        + body[len("WITH ") :]
-    )
+    return spark.sql(lsmc_sql(False, parts))

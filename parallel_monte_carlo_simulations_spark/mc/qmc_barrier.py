@@ -3,8 +3,8 @@ DuckDB-oracled.
 
 The path-DEPENDENT payoff class the GBM terminal twins can't express:
 an up-and-out call is knocked out if the spot touches the barrier at
-ANY monitoring date. Reuses ``lsmc.py``'s bit-exact quarterly path
-construction verbatim (per-date Halton uniforms, stratum-mean
+ANY monitoring date. Reuses ``lsmc.paths_sql``, the bit-exact quarterly
+path construction (per-date Halton uniforms, stratum-mean
 increments, literal multiplier CASEs, left-to-right product
 association) and prices
 
@@ -23,94 +23,46 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..registry import register
-from .lsmc import (
-    _BASES_DIGITS,
-    _lit,
-    _multiplier_case,
-    _quant,
-    _radical_inverse,
-    N_DATES,
-    N_PATHS,
-    N_STRATA,
-    RATE,
-    DT,
-    S0,
-)
+from .lsmc import DT, N_DATES, RATE, paths_sql
+from .shared_sql import lit, quant, register_sql
 
 #: Barrier level (up-and-out) and strike for this product.
 BARRIER = 130.0
 B_STRIKE = 100.0
-_DISC_T = _lit(math.exp(-RATE * DT * N_DATES))
+_DISC_T = lit(math.exp(-RATE * DT * N_DATES))
 
 
-def _body() -> str:
-    u = {
-        t + 1: _radical_inverse("i + 1", b, d)
-        for t, (b, d) in enumerate(_BASES_DIGITS)
-    }
-    k = {t: f"CAST(FLOOR({u[t]} * {N_STRATA}) AS INTEGER)" for t in u}
-    ks_cols = ", ".join(f"{k[t]} AS k{t}" for t in range(1, N_DATES + 1))
-    spot_ctes = []
-    prev = "ks"
-    for t in range(1, N_DATES + 1):
-        base = _lit(S0) if t == 1 else f"s{t - 1}"
-        spot_ctes.append(
-            f"sp{t} AS (SELECT *, ({base} * {_multiplier_case(f'k{t}')}) AS s{t} "
-            f"FROM {prev})"
-        )
-        prev = f"sp{t}"
+def _sql(duck: bool) -> str:
     running_max = "GREATEST(" + ", ".join(
         f"s{t}" for t in range(1, N_DATES + 1)
     ) + ")"
-    vanilla = f"GREATEST(s{N_DATES} - {_lit(B_STRIKE)}, 0.0e0)"
+    vanilla = f"GREATEST(s{N_DATES} - {lit(B_STRIKE)}, 0.0e0)"
     uoc = (
-        f"(CASE WHEN {running_max} < {_lit(BARRIER)} "
+        f"(CASE WHEN {running_max} < {lit(BARRIER)} "
         f"THEN {vanilla} ELSE 0.0e0 END)"
     )
     return (
-        f"WITH ks AS (SELECT i, {ks_cols} FROM idx),\n"
-        + ",\n".join(spot_ctes)
-        + f",\nm AS (SELECT {_quant('SUM(1.0e0)')} AS n, "
-        f"{_quant(f'SUM({uoc})')} AS sb, "
-        f"{_quant(f'SUM(({uoc}) * ({uoc}))')} AS sb2, "
-        f"{_quant(f'SUM({vanilla})')} AS sv, "
-        f"{_quant(f'SUM(CASE WHEN {running_max} >= {_lit(BARRIER)} THEN 1.0e0 ELSE 0.0e0 END)')} AS knocked "
-        f"FROM {prev})\n"
+        paths_sql(duck)
+        + f",\nm AS (SELECT {quant('SUM(1.0e0)')} AS n, "
+        f"{quant(f'SUM({uoc})')} AS sb, "
+        f"{quant(f'SUM(({uoc}) * ({uoc}))')} AS sb2, "
+        f"{quant(f'SUM({vanilla})')} AS sv, "
+        f"{quant(f'SUM(CASE WHEN {running_max} >= {lit(BARRIER)} THEN 1.0e0 ELSE 0.0e0 END)')} AS knocked "
+        f"FROM sp{N_DATES})\n"
         f"SELECT CAST(n AS BIGINT) AS n_paths, "
-        f"{_quant(f'{_DISC_T} * (sb / n)', 10_000)} AS barrier_price, "
-        f"{_quant(f'{_DISC_T} * (sv / n)', 10_000)} AS vanilla_price, "
-        f"{_quant('SQRT((sb2 - sb * sb / n) / (n - 1.0e0) / n)', 10_000)} "
+        f"{quant(f'{_DISC_T} * (sb / n)', 10_000)} AS barrier_price, "
+        f"{quant(f'{_DISC_T} * (sv / n)', 10_000)} AS vanilla_price, "
+        f"{quant('SQRT((sb2 - sb * sb / n) / (n - 1.0e0) / n)', 10_000)} "
         f"AS std_error, "
         f"CAST(knocked AS BIGINT) AS n_knocked FROM m"
     )
 
 
-def _register() -> None:
-    body = _body()
-    oracle = (
-        f"WITH idx AS (SELECT unnest(range(0, {N_PATHS})) AS i)\n, "
-        + body[len("WITH ") :]
-    ).replace(" DIV ", " // ")
-    spark_sql = (
-        f"WITH idx AS (SELECT id AS i FROM range({N_PATHS}))\n, "
-        + body[len("WITH ") :]
-    )
-
-    @register(
-        "q_mc_qmc_barrier",
-        oracle=oracle,
-        description=(
-            "up-and-out barrier call on the LSMC quarterly path grid: "
-            "path-dependent knock-out vs the vanilla call on identical "
-            "paths, exactly oracled"
-        ),
-        tags=("mc", "qmc", "barrier", "finance", "deterministic"),
-    )
-    def q_mc_qmc_barrier(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return spark.sql(spark_sql)
-
-
-_register()
+q_mc_qmc_barrier = register_sql(
+    "q_mc_qmc_barrier",
+    _sql,
+    "up-and-out barrier call on the LSMC quarterly path grid: "
+    "path-dependent knock-out vs the vanilla call on identical "
+    "paths, exactly oracled",
+    ("mc", "qmc", "barrier", "finance", "deterministic"),
+)

@@ -13,7 +13,7 @@ cross-engine:
 - the normal draw is the stratum conditional mean E[Z | stratum]
   (erf-derived Python literal pasted into BOTH engines' SQL);
 - one shared SQL text for Spark and DuckDB (association identical by
-  construction; `` DIV `` respelled ``//`` for DuckDB);
+  construction; ``shared_sql.register_sql`` writes both engines' text);
 - aggregate moments floor-quantized BEFORE any derived arithmetic
   (beta, std errors), so downstream doubles are bit-identical.
 
@@ -34,10 +34,15 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..registry import register
-from .lsmc import _lit, _quant, _radical_inverse, _stratum_means
+from .shared_sql import (
+    case_over,
+    lit,
+    quant,
+    radical_inverse,
+    range_rows,
+    register_sql,
+    stratum_means,
+)
 
 N_PATHS = 16_384  # 2^14: bit-reversal permutes 0..N-1, strata exactly equal
 _DIGITS = 14
@@ -48,25 +53,20 @@ OTM_STRIKE = 160.0  # importance twin: deep out-of-the-money
 _DISC = math.exp(-R * T)
 _DRIFT = (R - 0.5 * SIGMA * SIGMA) * T
 _VOL = SIGMA * math.sqrt(T)
-_Q = _stratum_means(K)
-
-
-def _case_over_k(values: list[float]) -> str:
-    """CASE k WHEN j THEN <literal> — per-stratum double literals."""
-    whens = " ".join(f"WHEN {j} THEN {_lit(v)}" for j, v in enumerate(values))
-    return f"(CASE k {whens} END)"
+_Q = stratum_means(K)
 
 
 def _spot_case(shift: float = 0.0, sign: float = 1.0) -> str:
     """S_T per stratum as one literal CASE: S0*exp(drift + vol*(sign*q + shift))."""
-    return _case_over_k(
-        [S0 * math.exp(_DRIFT + _VOL * (sign * q + shift)) for q in _Q]
+    return case_over(
+        "k", [lit(S0 * math.exp(_DRIFT + _VOL * (sign * q + shift))) for q in _Q]
     )
 
 
-def _paths_cte() -> str:
-    u = _radical_inverse("i", 2, _DIGITS)
+def _paths_cte(duck: bool) -> str:
+    u = radical_inverse("i", 2, _DIGITS)
     return (
+        f"idx AS ({range_rows('i', 0, N_PATHS, duck)}),\n"
         f"u AS (SELECT i, {u} AS uni FROM idx),\n"
         f"ks AS (SELECT i, CAST(FLOOR(uni * {K}) AS INTEGER) AS k FROM u)"
     )
@@ -84,156 +84,138 @@ def _mean_stderr(sx: str, sx2: str, n: str) -> tuple[str, str]:
 
 def _moments_cte(x_expr: str, src: str, extra: str = "") -> str:
     return (
-        f"m AS (SELECT {_quant('SUM(1.0e0)')} AS n, "
-        f"{_quant(f'SUM({x_expr})')} AS sx, "
-        f"{_quant(f'SUM(({x_expr}) * ({x_expr}))')} AS sx2{extra} FROM {src})"
+        f"m AS (SELECT {quant('SUM(1.0e0)')} AS n, "
+        f"{quant(f'SUM({x_expr})')} AS sx, "
+        f"{quant(f'SUM(({x_expr}) * ({x_expr}))')} AS sx2{extra} FROM {src})"
     )
 
 
-def _plain_body() -> str:
-    pay = f"({_lit(_DISC)} * GREATEST({_spot_case()} - {_lit(STRIKE)}, 0.0e0))"
+def _plain_sql(duck: bool) -> str:
+    pay = f"({lit(_DISC)} * GREATEST({_spot_case()} - {lit(STRIKE)}, 0.0e0))"
     mean, err = _mean_stderr("sx", "sx2", "n")
     return (
-        f"WITH {_paths_cte()},\n"
+        f"WITH {_paths_cte(duck)},\n"
         f"{_moments_cte(pay, 'ks')}\n"
         f"SELECT CAST(n AS BIGINT) AS n_paths, "
-        f"{_quant(mean, 10_000)} AS mc_price, "
-        f"{_quant(err, 10_000)} AS std_error FROM m"
+        f"{quant(mean, 10_000)} AS mc_price, "
+        f"{quant(err, 10_000)} AS std_error FROM m"
     )
 
 
-def _antithetic_body() -> str:
+def _antithetic_sql(duck: bool) -> str:
     # The mirrored leg negates the SAME stratum mean (sign=-1 inside the
     # exp literal), so the +/- pairing is exact even though the erf-derived
     # strata are only symmetric to ~1e-14.
-    up = f"GREATEST({_spot_case()} - {_lit(STRIKE)}, 0.0e0)"
-    dn = f"GREATEST({_spot_case(sign=-1.0)} - {_lit(STRIKE)}, 0.0e0)"
-    pair = f"({_lit(_DISC)} * (({up}) + ({dn})) / 2.0e0)"
+    up = f"GREATEST({_spot_case()} - {lit(STRIKE)}, 0.0e0)"
+    dn = f"GREATEST({_spot_case(sign=-1.0)} - {lit(STRIKE)}, 0.0e0)"
+    pair = f"({lit(_DISC)} * (({up}) + ({dn})) / 2.0e0)"
     mean, err = _mean_stderr("sx", "sx2", "n")
     return (
-        f"WITH {_paths_cte()},\n"
+        f"WITH {_paths_cte(duck)},\n"
         f"{_moments_cte(pair, 'ks')}\n"
         f"SELECT CAST(n AS BIGINT) AS n_pairs, "
-        f"{_quant(mean, 10_000)} AS mc_price, "
-        f"{_quant(err, 10_000)} AS std_error FROM m"
+        f"{quant(mean, 10_000)} AS mc_price, "
+        f"{quant(err, 10_000)} AS std_error FROM m"
     )
 
 
-def _control_variate_body() -> str:
+def _control_variate_sql(duck: bool) -> str:
     # Control = S_T with its DISCRETIZED mean as the centering constant
     # (the exact mean of the stratified S_T, not the continuous
     # S0*exp(rT) — under strata the two differ by the quadrature bias).
     ev_disc = sum(S0 * math.exp(_DRIFT + _VOL * q) for q in _Q) / K
-    pay = f"(GREATEST({_spot_case()} - {_lit(STRIKE)}, 0.0e0))"
+    pay = f"(GREATEST({_spot_case()} - {lit(STRIKE)}, 0.0e0))"
     ctl = _spot_case()
     extra = (
-        f", {_quant(f'SUM({ctl})')} AS sc, "
-        f"{_quant(f'SUM(({ctl}) * ({ctl}))')} AS sc2, "
-        f"{_quant(f'SUM(({pay}) * ({ctl}))')} AS sxc"
+        f", {quant(f'SUM({ctl})')} AS sc, "
+        f"{quant(f'SUM(({ctl}) * ({ctl}))')} AS sc2, "
+        f"{quant(f'SUM(({pay}) * ({ctl}))')} AS sxc"
     )
     beta = "((sxc - sx * sc / n) / (sc2 - sc * sc / n))"
     var_x = "((sx2 - sx * sx / n) / (n - 1.0e0))"
     var_c = "((sc2 - sc * sc / n) / (n - 1.0e0))"
     cov = "((sxc - sx * sc / n) / (n - 1.0e0))"
     var_adj = f"({var_x} - 2.0e0 * beta * {cov} + (beta * beta) * {var_c})"
-    price = f"({_lit(_DISC)} * (sx / n - beta * (sc / n - {_lit(ev_disc)})))"
-    err = f"({_lit(_DISC)} * SQRT({var_adj} / n))"
+    price = f"({lit(_DISC)} * (sx / n - beta * (sc / n - {lit(ev_disc)})))"
+    err = f"({lit(_DISC)} * SQRT({var_adj} / n))"
     return (
-        f"WITH {_paths_cte()},\n"
+        f"WITH {_paths_cte(duck)},\n"
         f"{_moments_cte(pay, 'ks', extra)},\n"
-        f"b AS (SELECT m.*, {_quant(beta, 10_000)} AS beta FROM m)\n"
+        f"b AS (SELECT m.*, {quant(beta, 10_000)} AS beta FROM m)\n"
         f"SELECT CAST(n AS BIGINT) AS n_paths, "
-        f"{_quant(price, 10_000)} AS mc_price, "
-        f"{_quant(err, 10_000)} AS std_error, "
+        f"{quant(price, 10_000)} AS mc_price, "
+        f"{quant(err, 10_000)} AS std_error, "
         f"beta FROM b"
     )
 
 
-def _importance_body() -> str:
+def _importance_sql(duck: bool) -> str:
     # Likelihood ratio for sampling Z ~ N(theta, 1) instead of N(0, 1):
     # w = exp(-theta*y - theta^2/2) with y the standard draw (stratum
     # mean); the shifted spot and the weight are both per-stratum
     # literals, all closed-form on the discretized path.
     theta = (math.log(OTM_STRIKE / S0) - _DRIFT) / _VOL
     xp = (
-        f"({_lit(_DISC)} * GREATEST({_spot_case()} - {_lit(OTM_STRIKE)}, 0.0e0))"
+        f"({lit(_DISC)} * GREATEST({_spot_case()} - {lit(OTM_STRIKE)}, 0.0e0))"
     )
-    w = _case_over_k([math.exp(-theta * q - 0.5 * theta * theta) for q in _Q])
+    w = case_over("k", [lit(math.exp(-theta * q - 0.5 * theta * theta)) for q in _Q])
     xi = (
-        f"({_lit(_DISC)} * GREATEST({_spot_case(shift=theta)} - "
-        f"{_lit(OTM_STRIKE)}, 0.0e0) * {w})"
+        f"({lit(_DISC)} * GREATEST({_spot_case(shift=theta)} - "
+        f"{lit(OTM_STRIKE)}, 0.0e0) * {w})"
     )
     mean, err = _mean_stderr("sx", "sx2", "n")
     mean_i, err_i = _mean_stderr("si", "si2", "n")
     extra = (
-        f", {_quant(f'SUM({xi})')} AS si, "
-        f"{_quant(f'SUM(({xi}) * ({xi}))')} AS si2"
+        f", {quant(f'SUM({xi})')} AS si, "
+        f"{quant(f'SUM(({xi}) * ({xi}))')} AS si2"
     )
     return (
-        f"WITH {_paths_cte()},\n"
+        f"WITH {_paths_cte(duck)},\n"
         f"{_moments_cte(xp, 'ks', extra)}\n"
         f"SELECT 'plain' AS estimator, CAST(n AS BIGINT) AS n_paths, "
-        f"{_quant(mean, 10_000)} AS mc_price, "
-        f"{_quant(err, 10_000)} AS std_error FROM m\n"
+        f"{quant(mean, 10_000)} AS mc_price, "
+        f"{quant(err, 10_000)} AS std_error FROM m\n"
         f"UNION ALL\n"
         f"SELECT 'importance' AS estimator, CAST(n AS BIGINT) AS n_paths, "
-        f"{_quant(mean_i, 10_000)} AS mc_price, "
-        f"{_quant(err_i, 10_000)} AS std_error FROM m"
+        f"{quant(mean_i, 10_000)} AS mc_price, "
+        f"{quant(err_i, 10_000)} AS std_error FROM m"
     )
 
 
-def _register_twin(name: str, body: str, description: str, tags: tuple[str, ...]):
-    oracle = (
-        f"WITH idx AS (SELECT unnest(range(0, {N_PATHS})) AS i)\n, "
-        + body[len("WITH ") :]
-    ).replace(" DIV ", " // ")
-    spark_sql = (
-        f"WITH idx AS (SELECT id AS i FROM range({N_PATHS}))\n, "
-        + body[len("WITH ") :]
-    )
-
-    @register(name, oracle=oracle, description=description, tags=tags)
-    def _q(spark: SparkSession, sf_dir: str, _sql: str = spark_sql) -> DataFrame:
-        return spark.sql(_sql)
-
-    _q.__name__ = name
-    return _q
-
-
-q_mc_gbm_qmc_price = _register_twin(
+q_mc_gbm_qmc_price = register_sql(
     "q_mc_gbm_qmc_price",
-    _plain_body(),
+    _plain_sql,
     "QMC twin of q_mc_gbm_option_price: stratified-Halton GBM terminal, "
     "European call, exactly oracled",
     ("mc", "qmc", "gbm", "finance", "deterministic"),
 )
 
-q_mc_gbm_qmc_antithetic = _register_twin(
+q_mc_gbm_qmc_antithetic = register_sql(
     "q_mc_gbm_qmc_antithetic",
-    _antithetic_body(),
+    _antithetic_sql,
     "QMC twin of q_mc_gbm_antithetic: reflected-stratum pairs, exactly "
     "oracled variance reduction",
     ("mc", "qmc", "gbm", "variance_reduction", "antithetic", "deterministic"),
 )
 
-q_mc_gbm_qmc_control_variate = _register_twin(
+q_mc_gbm_qmc_control_variate = register_sql(
     "q_mc_gbm_qmc_control_variate",
-    _control_variate_body(),
+    _control_variate_sql,
     "QMC twin of q_mc_gbm_control_variate: S_T control with discretized "
     "mean, beta from quantized moments, exactly oracled",
     ("mc", "qmc", "gbm", "variance_reduction", "control_variate", "deterministic"),
 )
 
-q_mc_gbm_qmc_importance = _register_twin(
+q_mc_gbm_qmc_importance = register_sql(
     "q_mc_gbm_qmc_importance",
-    _importance_body(),
+    _importance_sql,
     "QMC twin of q_mc_gbm_importance: drift-shifted strata with "
     "closed-form likelihood-ratio weights, exactly oracled",
     ("mc", "qmc", "gbm", "variance_reduction", "importance_sampling", "deterministic"),
 )
 
 
-def _greeks_body() -> str:
+def _greeks_sql(duck: bool) -> str:
     # Pathwise (infinitesimal-perturbation) Greeks on the discretized
     # path: every per-stratum term is a closed-form literal.
     #   delta = disc * E[ 1{S_T > K} * S_T / S0 ]          (dS_T/dS0 = S_T/S0)
@@ -249,28 +231,28 @@ def _greeks_body() -> str:
         _DISC * s * (sqrt_t * q - SIGMA * T) if s > STRIKE else 0.0
         for s, q in zip(spots, _Q)
     ]
-    dx = _case_over_k(delta_vals)
-    vx = _case_over_k(vega_vals)
+    dx = case_over("k", [lit(v) for v in delta_vals])
+    vx = case_over("k", [lit(v) for v in vega_vals])
     mean_d, err_d = _mean_stderr("sx", "sx2", "n")
     mean_v, err_v = _mean_stderr("sv", "sv2", "n")
     extra = (
-        f", {_quant(f'SUM({vx})')} AS sv, "
-        f"{_quant(f'SUM(({vx}) * ({vx}))')} AS sv2"
+        f", {quant(f'SUM({vx})')} AS sv, "
+        f"{quant(f'SUM(({vx}) * ({vx}))')} AS sv2"
     )
     return (
-        f"WITH {_paths_cte()},\n"
+        f"WITH {_paths_cte(duck)},\n"
         f"{_moments_cte(dx, 'ks', extra)}\n"
         f"SELECT CAST(n AS BIGINT) AS n_paths, "
-        f"{_quant(mean_d, 10_000)} AS delta, "
-        f"{_quant(err_d, 10_000)} AS delta_se, "
-        f"{_quant(mean_v, 10_000)} AS vega, "
-        f"{_quant(err_v, 10_000)} AS vega_se FROM m"
+        f"{quant(mean_d, 10_000)} AS delta, "
+        f"{quant(err_d, 10_000)} AS delta_se, "
+        f"{quant(mean_v, 10_000)} AS vega, "
+        f"{quant(err_v, 10_000)} AS vega_se FROM m"
     )
 
 
-q_mc_gbm_qmc_greeks = _register_twin(
+q_mc_gbm_qmc_greeks = register_sql(
     "q_mc_gbm_qmc_greeks",
-    _greeks_body(),
+    _greeks_sql,
     "pathwise Greeks on the stratified-QMC GBM terminal: delta "
     "(1{ITM} S_T/S0) and vega (1{ITM} S_T (sqrt(T)z - sigma T)), "
     "exactly oracled",

@@ -26,27 +26,22 @@ crosses the wire.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..registry import register
-from .lsmc import _radical_inverse, _stratum_means
+from .shared_sql import (
+    N_STRATA,
+    case_over,
+    radical_inverse,
+    range_rows,
+    register_sql,
+    stratum_means,
+)
 
 N_PATHS = 1024
 N_STEPS = 32
-N_STRATA = 8
-_Q = _stratum_means(N_STRATA)
+# The stratum-mean increments as exact DECIMAL(29,9) literals.
+_INCS = [f"CAST({round(v, 9)!r} AS DECIMAL(29,9))" for v in stratum_means(N_STRATA)]
 
 
-def _inc_case() -> str:
-    """Stratum-mean increment as an exact DECIMAL(29,9) literal CASE."""
-    whens = " ".join(
-        f"WHEN {j} THEN CAST({round(v, 9)!r} AS DECIMAL(29,9))"
-        for j, v in enumerate(_Q)
-    )
-    return f"(CASE k {whens} END)"
-
-
-def _body() -> str:
+def _sql(duck: bool) -> str:
     # Cranley-Patterson rotation: the base-2 radical inverse of the STEP
     # gives each path the same low-discrepancy step skeleton, and the
     # base-3 radical inverse of the PATH shifts it mod 1 — uniformity is
@@ -55,11 +50,11 @@ def _body() -> str:
     # does NOT work here: either layout aliases path and step into the
     # same digits and produces degenerate — trending or identical —
     # walks; measured before settling on the rotation.)
-    u_step = _radical_inverse("step", 2, 5)  # 2^5 = 32 steps
-    u_path = _radical_inverse("path", 3, 7)  # 3^7 > 1024 paths
+    u_step = radical_inverse("step", 2, 5)  # 2^5 = 32 steps
+    u_path = radical_inverse("path", 3, 7)  # 3^7 > 1024 paths
     u = f"(({u_step}) + ({u_path}))"
     frac = f"(({u}) - FLOOR({u}))"
-    return f"""
+    return f"""WITH idx AS ({range_rows("i", 0, N_PATHS * N_STEPS, duck)})
 , ks AS (
   SELECT (i DIV {N_STEPS}) AS path, (i % {N_STEPS}) AS step,
          CAST(FLOOR({frac} * {N_STRATA}) AS INTEGER) AS k
@@ -67,7 +62,7 @@ def _body() -> str:
 ),
 walk AS (
   SELECT path, step,
-         SUM({_inc_case()}) OVER (PARTITION BY path ORDER BY step
+         SUM({case_over('k', _INCS)}) OVER (PARTITION BY path ORDER BY step
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS level
   FROM ks
 ),
@@ -90,26 +85,11 @@ FROM per_path
 """
 
 
-def _register() -> None:
-    n_idx = N_PATHS * N_STEPS
-    body = _body()
-    oracle = (
-        f"WITH idx AS (SELECT unnest(range(0, {n_idx})) AS i)" + body
-    ).replace(" DIV ", " // ")
-    spark_sql = f"WITH idx AS (SELECT id AS i FROM range({n_idx}))" + body
-
-    @register(
-        "q_mc_qmc_drawdown",
-        oracle=oracle,
-        description=(
-            "QMC twin of q_mc_walk_drawdown: stratified random-walk max "
-            "drawdown via exact-decimal cumulative sums and running "
-            "peaks — the drawdown window machinery, exactly oracled"
-        ),
-        tags=("mc", "qmc", "drawdown", "window", "deterministic"),
-    )
-    def q_mc_qmc_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return spark.sql(spark_sql)
-
-
-_register()
+q_mc_qmc_drawdown = register_sql(
+    "q_mc_qmc_drawdown",
+    _sql,
+    "QMC twin of q_mc_walk_drawdown: stratified random-walk max "
+    "drawdown via exact-decimal cumulative sums and running "
+    "peaks — the drawdown window machinery, exactly oracled",
+    ("mc", "qmc", "drawdown", "window", "deterministic"),
+)

@@ -12,9 +12,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.microunit import qround_col, qunits_col, rdiv_halfup_expr
+from ..functions.microunit import qround_col, rdiv_halfup_expr, units_col
 from ..registry import register
 from .battery import MCBattery
+from .shared_sql import range_rows, register_sql
 
 
 def _mc_mean_se(grouped, val_col):
@@ -31,7 +32,7 @@ def _mc_mean_se(grouped, val_col):
     of the exact sums, independent of partitioning. Returns the
     aggregated frame with columns n, mean_v, se_v (mean and standard
     error of the mean, in natural units)."""
-    u = qunits_col(val_col, 6)
+    u = units_col(val_col, 6)
     agg = grouped.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(u).alias("s1"),
@@ -454,35 +455,7 @@ def _radical_inverse_sql(i: str, base: int, digits: int) -> str:
     return "(" + " + ".join(terms) + ")"
 
 
-def _qmc_body() -> str:
-    x = _radical_inverse_sql("i", 2, _QMC_BITS)
-    y = _radical_inverse_sql("i", 3, _QMC_TRITS)
-    return f"""
-SELECT CAST(COUNT(*) AS BIGINT) AS n_points,
-       CAST(SUM(CASE WHEN {x} * {x} + {y} * {y} < 1.0
-                THEN 1 ELSE 0 END) AS BIGINT) AS n_inside,
-       FLOOR((CAST(4.0 AS DOUBLE) * SUM(CASE WHEN {x} * {x} + {y} * {y} < 1.0
-                       THEN 1 ELSE 0 END) / COUNT(*)) * 1e6 + 0.5) / 1e6 AS pi_est
-FROM pts
-"""
-
-
-_QMC_ORACLE = (
-    f"WITH pts AS (SELECT unnest(range(1, {_QMC_N} + 1)) AS i)"
-    + _qmc_body().replace(" DIV ", " // ")
-)
-
-
-@register(
-    "q_mc_qmc_pi",
-    oracle=_QMC_ORACLE,
-    description=(
-        f"quasi-Monte Carlo pi: {_QMC_N} Halton(2,3) points, pure "
-        "arithmetic in the index — the one exactly-oracled MC estimator"
-    ),
-    tags=("mc", "qmc", "halton", "deterministic"),
-)
-def q_mc_qmc_pi(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _qmc_sql(duck: bool) -> str:
     """Quasi-Monte Carlo integration with a Halton(2,3) low-discrepancy
     sequence: each point is a radical-inverse polynomial of its index,
     so the whole estimator is a relational plan — range source, digit
@@ -492,7 +465,22 @@ def q_mc_qmc_pi(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays bit-identical IEEE arithmetic, making this the one
     Monte Carlo query the hash gate fully verifies. Trivially parallel:
     the range source splits across the cluster like any scan."""
-    spark.range(1, _QMC_N + 1).select(F.col("id").alias("i")).createOrReplaceTempView(
-        "pts"
-    )
-    return spark.sql(_qmc_body())
+    x = _radical_inverse_sql("i", 2, _QMC_BITS)
+    y = _radical_inverse_sql("i", 3, _QMC_TRITS)
+    return f"""WITH pts AS ({range_rows("i", 1, _QMC_N + 1, duck)})
+SELECT CAST(COUNT(*) AS BIGINT) AS n_points,
+       CAST(SUM(CASE WHEN {x} * {x} + {y} * {y} < 1.0
+                THEN 1 ELSE 0 END) AS BIGINT) AS n_inside,
+       FLOOR((CAST(4.0 AS DOUBLE) * SUM(CASE WHEN {x} * {x} + {y} * {y} < 1.0
+                       THEN 1 ELSE 0 END) / COUNT(*)) * 1e6 + 0.5) / 1e6 AS pi_est
+FROM pts
+"""
+
+
+q_mc_qmc_pi = register_sql(
+    "q_mc_qmc_pi",
+    _qmc_sql,
+    f"quasi-Monte Carlo pi: {_QMC_N} Halton(2,3) points, pure "
+    "arithmetic in the index — the one exactly-oracled MC estimator",
+    ("mc", "qmc", "halton", "deterministic"),
+)

@@ -20,10 +20,14 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..registry import register
-from .lsmc import N_STRATA, _lit, _quant, _radical_inverse, _stratum_means
+from .shared_sql import (
+    lit,
+    normal_case,
+    quant,
+    radical_inverse,
+    range_rows,
+    register_sql,
+)
 
 N_SCEN = 20_000
 ALPHA = 0.99  # 99% VaR
@@ -34,29 +38,22 @@ HORIZON = 10.0 / 252.0
 _BASES_DIGITS = ((2, 15), (3, 10))  # cover N_SCEN < 2^15, 3^10
 
 
-def _z_case(u_expr: str) -> str:
-    whens = " ".join(
-        f"WHEN {j} THEN {_lit(q)}"
-        for j, q in enumerate(_stratum_means(N_STRATA))
-    )
-    return f"(CASE CAST(FLOOR({u_expr} * {N_STRATA}) AS INTEGER) {whens} END)"
-
-
-def risk_body() -> str:
+def _sql(duck: bool) -> str:
     (b1, d1), (b2, d2) = _BASES_DIGITS
-    z1 = _z_case(_radical_inverse("i + 1", b1, d1))
-    z2r = _z_case(_radical_inverse("i + 1", b2, d2))
-    chol = _lit(math.sqrt(1 - RHO * RHO))
-    s1 = _lit(VOL1 * math.sqrt(HORIZON))
-    s2 = _lit(VOL2 * math.sqrt(HORIZON))
+    z1 = normal_case(radical_inverse("i + 1", b1, d1))
+    z2r = normal_case(radical_inverse("i + 1", b2, d2))
+    chol = lit(math.sqrt(1 - RHO * RHO))
+    s1 = lit(VOL1 * math.sqrt(HORIZON))
+    s2 = lit(VOL2 * math.sqrt(HORIZON))
     k = math.ceil((1 - ALPHA) * N_SCEN)  # worst (1-alpha) tail size
-    return f"""zc AS (
-  SELECT i, {z1} AS z1, ({_lit(RHO)} * {z1} + {chol} * {z2r}) AS z2
+    return f"""WITH idx AS ({range_rows("i", 0, N_SCEN, duck)}),
+zc AS (
+  SELECT i, {z1} AS z1, ({lit(RHO)} * {z1} + {chol} * {z2r}) AS z2
   FROM idx
 ),
 losses AS (
   SELECT i,
-         -({_lit(W1)} * {s1} * z1 + {_lit(W2)} * {s2} * z2) AS loss
+         -({lit(W1)} * {s1} * z1 + {lit(W2)} * {s2} * z2) AS loss
   FROM zc
 ),
 ranked AS (
@@ -65,30 +62,16 @@ ranked AS (
   FROM losses
 )
 SELECT CAST(COUNT(*) AS BIGINT)  AS n_tail,
-       {_quant(f"MIN(loss)", 1_000_000)}  AS var_{int(ALPHA * 100)},
-       {_quant(f"AVG(loss)", 1_000_000)}  AS cvar_{int(ALPHA * 100)}
+       {quant(f"MIN(loss)", 1_000_000)}  AS var_{int(ALPHA * 100)},
+       {quant(f"AVG(loss)", 1_000_000)}  AS cvar_{int(ALPHA * 100)}
 FROM ranked WHERE rk <= {k}"""
 
 
-def _oracle() -> str:
-    return (
-        f"WITH idx AS (SELECT unnest(range(0, {N_SCEN})) AS i),\n"
-        + risk_body().replace(" DIV ", " // ")
-    )
-
-
-@register(
+q_mc_var_cvar = register_sql(
     "q_mc_var_cvar",
-    oracle=_oracle(),
-    description=(
-        f"portfolio risk on {N_SCEN} correlated QMC scenarios: "
-        f"{int(ALPHA * 100)}% VaR (exact rank-cut order statistic) and "
-        "CVaR/expected shortfall (mean of the tail)"
-    ),
-    tags=("mc", "qmc", "risk", "var", "deterministic"),
+    _sql,
+    f"portfolio risk on {N_SCEN} correlated QMC scenarios: "
+    f"{int(ALPHA * 100)}% VaR (exact rank-cut order statistic) and "
+    "CVaR/expected shortfall (mean of the tail)",
+    ("mc", "qmc", "risk", "var", "deterministic"),
 )
-def q_mc_var_cvar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(
-        f"WITH idx AS (SELECT id AS i FROM range({N_SCEN})),\n"
-        + risk_body()
-    )

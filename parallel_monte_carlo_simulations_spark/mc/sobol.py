@@ -12,17 +12,15 @@ bit manipulation — so the whole estimator is whole-stage-codegen JVM
 work AND exactly replayable in DuckDB.
 
 Cross-engine note: integer XOR is spelled ``a ^ b`` in Spark SQL but
-``xor(a, b)`` in DuckDB, so the shared expression text uses a
-placeholder rewritten per engine (same technique as DIV vs //). The
-direction numbers are Python-computed integer literals — identical on
-both sides by construction.
+``xor(a, b)`` in DuckDB, so the one builder writes each engine's
+spelling from its ``duck`` flag (``shared_sql`` owns the range source).
+The direction numbers are Python-computed integer literals — identical
+on both sides by construction.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from ..registry import register
+from .shared_sql import range_rows, register_sql
 
 N_POINTS = 100_000
 BITS = 20  # covers indices < 2^20
@@ -39,22 +37,24 @@ def _direction_numbers() -> tuple[list[int], list[int]]:
     return d1, d2
 
 
-def _sobol_expr(d: list[int]) -> str:
-    """XOR fold over gray-code bits, as shared SQL text with the XORF
-    placeholder; ``g`` is the gray code column."""
+def _xor(a: str, b: str, duck: bool) -> str:
+    return f"xor({a}, {b})" if duck else f"(({a}) ^ ({b}))"
+
+
+def _sobol_expr(d: list[int], duck: bool) -> str:
+    """XOR fold over gray-code bits; ``g`` is the gray code column."""
     expr = "0"
     for k in range(BITS):
-        expr = (
-            f"XORF({expr}, CASE WHEN ((g >> {k}) & 1) = 1 "
-            f"THEN {d[k]} ELSE 0 END)"
-        )
+        bit = f"CASE WHEN ((g >> {k}) & 1) = 1 THEN {d[k]} ELSE 0 END"
+        expr = _xor(expr, bit, duck)
     return f"(({expr}) / 4294967296.0e0)"
 
 
-def _body() -> str:
+def _sql(duck: bool) -> str:
     d1, d2 = _direction_numbers()
-    x, y = _sobol_expr(d1), _sobol_expr(d2)
-    return f"""
+    x, y = _sobol_expr(d1, duck), _sobol_expr(d2, duck)
+    return f"""WITH pts AS ({range_rows("i", 1, N_POINTS + 1, duck)}),
+g AS (SELECT {_xor("i", "i >> 1", duck)} AS g FROM pts)
 SELECT CAST(COUNT(*) AS BIGINT) AS n_points,
        CAST(SUM(CASE WHEN {x} * {x} + {y} * {y} < 1.0e0
                 THEN 1 ELSE 0 END) AS BIGINT) AS n_inside,
@@ -64,59 +64,11 @@ FROM g
 """
 
 
-def _oracle() -> str:
-    body = _body().replace("XORF(", "xor(")
-    return (
-        f"WITH pts AS (SELECT unnest(range(1, {N_POINTS} + 1)) AS i),\n"
-        f"g AS (SELECT xor(i, i >> 1) AS g FROM pts)"
-        + body
-    )
-
-
-@register(
+q_mc_sobol_pi = register_sql(
     "q_mc_sobol_pi",
-    oracle=_oracle(),
-    description=(
-        f"Sobol QMC pi: {N_POINTS} points via gray-code XOR folds of "
-        "primitive-polynomial direction numbers — second exactly-oracled "
-        "quasi-random generator (pure integer bit math, zero Python)"
-    ),
-    tags=("mc", "qmc", "sobol", "deterministic"),
+    _sql,
+    f"Sobol QMC pi: {N_POINTS} points via gray-code XOR folds of "
+    "primitive-polynomial direction numbers — second exactly-oracled "
+    "quasi-random generator (pure integer bit math, zero Python)",
+    ("mc", "qmc", "sobol", "deterministic"),
 )
-def q_mc_sobol_pi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Spark: XORF(a, b) -> ((a) ^ (b)). The fold nests left-deep, so
-    # rewrite innermost-first (rindex finds the deepest call) and close
-    # each at its matching top-level paren.
-    body = _body()
-    while "XORF(" in body:
-        start = body.rindex("XORF(")
-        depth = 0
-        for j in range(start + 5, len(body)):
-            c = body[j]
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    a, b = _split_args(body[start + 5 : j])
-                    body = body[:start] + f"(({a}) ^ ({b}))" + body[j + 1 :]
-                    break
-                depth -= 1
-    sql = (
-        f"WITH pts AS (SELECT id AS i FROM range(1, {N_POINTS} + 1)),\n"
-        f"g AS (SELECT i ^ (i >> 1) AS g FROM pts)"
-        + body
-    )
-    return spark.sql(sql)
-
-
-def _split_args(s: str) -> tuple[str, str]:
-    """Split 'a, b' at the top-level comma (args may nest parens)."""
-    depth = 0
-    for j, c in enumerate(s):
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            return s[:j], s[j + 1 :]
-    raise ValueError(f"no top-level comma in {s!r}")

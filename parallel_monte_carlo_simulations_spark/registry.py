@@ -87,20 +87,14 @@ def load_all_queries() -> dict[str, QuerySpec]:
     )
     from .functions import pipeline  # noqa: F401  (after dedup: composes it)
     from .functions import pipeline2  # noqa: F401  (after similarity: composes it)
-    from .mc import bridge, hashrng, lsmc, qmc_barrier, qmc_gbm, qmc_walk, risk, sobol, queries as mc_queries  # noqa: F401
+    # lsmc first: module registration order sets the round-robin order.
+    from .mc import lsmc, bridge, hashrng, qmc_barrier, qmc_gbm, qmc_walk, risk, sobol, queries as mc_queries  # noqa: F401
 
     return _driver_order(REGISTRY)
 
 
 def _driver_order(registry: dict[str, QuerySpec]) -> dict[str, QuerySpec]:
-    try:
-        from .coverage import DRIVER_COVERED
-    except ImportError:  # pragma: no cover - generated file missing
-        DRIVER_COVERED = {}
-    try:
-        from .coverage import KNOWN_NAMES
-    except ImportError:  # pragma: no cover - pre-KNOWN_NAMES coverage.py
-        KNOWN_NAMES = frozenset(registry)
+    from .coverage import DRIVER_COVERED, KNOWN_NAMES
 
     # tier -> module (first-appearance order) -> names in registration order.
     # Tier 0 splits in two: the never-covered BACKLOG (known when coverage

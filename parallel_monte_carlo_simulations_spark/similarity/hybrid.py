@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, dot, norm, sql_as_double, sql_cosine
-from ..functions.microunit import rdiv_halfup_duck, rdiv_halfup_expr, qunits_col
+from ..functions.microunit import rdiv_halfup_duck, rdiv_halfup_expr, units_col
 from ..registry import register
 from ..tables import table
 
@@ -163,7 +163,7 @@ def q_search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.sum(
-                qunits_col(idf * F.col("tf") * (_K1 + 1.0) / denom, 8)
+                units_col(idf * F.col("tf") * (_K1 + 1.0) / denom, 8)
             ).alias("score_u8")
         )
         .select(

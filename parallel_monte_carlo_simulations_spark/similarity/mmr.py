@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.microunit import rdiv_halfup_duck, rdiv_halfup_expr, qunits_col
+from ..functions.microunit import rdiv_halfup_duck, rdiv_halfup_expr, units_col
 from ..registry import register
 from ..tables import table
 
@@ -199,7 +199,7 @@ def q_search_mmr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.sum(
-                qunits_col(idf * F.col("tf") * (_K1 + 1.0) / denom, 8)
+                units_col(idf * F.col("tf") * (_K1 + 1.0) / denom, 8)
             ).alias("rel_u8")
         )
         .select(

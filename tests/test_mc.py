@@ -383,6 +383,19 @@ def test_qmc_pi_accuracy_beats_sqrt_n(spark):
     assert abs(float(row.pi_est) - math.pi) < 1.5e-3, row.pi_est
 
 
+def test_qmc_pi_leaves_session_views_alone(spark):
+    """q_mc_qmc_pi reads its points from a CTE: a caller's temp view
+    named ``pts`` neither feeds the query nor gets replaced by it."""
+    from parallel_monte_carlo_simulations_spark.mc.queries import q_mc_qmc_pi
+
+    spark.createDataFrame([(7,), (8,)], "i bigint").createOrReplaceTempView("pts")
+    try:
+        assert q_mc_qmc_pi(spark, "").collect()[0].n_points == 200_000
+        assert sorted(r.i for r in spark.table("pts").collect()) == [7, 8]
+    finally:
+        spark.catalog.dropTempView("pts")
+
+
 def test_lsmc_american_put_sane(spark):
     """Independent verification of q_mc_american_lsmc: re-implement the
     same discretized-QMC LSMC in straight numpy (no shared SQL), and

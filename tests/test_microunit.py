@@ -352,9 +352,11 @@ def test_qround_duck_is_floor_form(x, digits):
 
 
 def test_qround_spark_matches_duck(spark):
+    from pyspark.sql import functions as F
+
     from parallel_monte_carlo_simulations_spark.functions.microunit import (
+        qround_col,
         qround_duck,
-        qround_expr,
     )
 
     cases = [33.38625, -33.38625, 0.0, 490.02, 1e-7, 123456.789012345, -0.07]
@@ -363,7 +365,7 @@ def test_qround_spark_matches_duck(spark):
     for digits in (2, 4, 6):
         got = [
             r.q
-            for r in df.select(qround_expr("x", digits).alias("q"))
+            for r in df.select(qround_col(F.col("x"), digits).alias("q"))
             .collect()
         ]
         duck = [

@@ -10,10 +10,14 @@ Each run's end-to-end metrics go to stderr as one JSON line when it ends.
 The summary on stdout gives, for every end-to-end metric in NEW_TREE's
 ``BENCHMARK.json``, each side's median and quartiles, the median gain
 (old over new, oriented so that > 1 means the new tree is better), and how
-many pairs each side won; then each side's failed and attempted operations.
-The exit status is 1 if any run reports a wrong result (``correct`` false
-or a failed operation), so a scripted A/B cannot pass over a tree that
-gives wrong answers.
+many pairs each side won, and a verdict against the metric's ``bound``
+(a fraction of the old median): "worse than bound" when the new median is
+worse than the old one by more than the bound, "unresolved" when the old
+side's quartile distance is wider than the bound (unless every new run
+beats every old run), and "within bound" otherwise. Then it gives each
+side's failed and attempted operations. The exit status is 1 if any run
+reports a wrong result (``correct`` false or a failed operation), so a
+scripted A/B cannot pass over a tree that gives wrong answers.
 
 All measuring is ``perfbench/run.py``'s; this script only runs it and
 summarises what it prints.
@@ -50,10 +54,23 @@ def quartiles(values: list[float]) -> tuple[float, float, float]:
     return q1, q2, q3
 
 
-def summarise(runs: dict[str, list[dict]], better: dict[str, str]) -> str:
+def verdict(old: list[float], new: list[float], direction: str, bound: float) -> str:
+    """Reading of one metric against its bound, per the module docstring."""
+    sign = 1 if direction == "higher" else -1
+    old_med = statistics.median(old)
+    if sign * (old_med - statistics.median(new)) > bound * old_med:
+        return "worse than bound"
+    q1, _, q3 = quartiles(old)
+    if q3 - q1 > bound * old_med and not all(sign * (w - o) > 0 for w in new for o in old):
+        return "unresolved"
+    return "within bound"
+
+
+def summarise(runs: dict[str, list[dict]], metrics: dict[str, dict]) -> str:
     out = [f"{'metric':<14} {'side':<4} {'median':>10} {'q1':>10} {'q3':>10} {'wins':>5}"]
     n = len(runs["old"])
-    for name, direction in better.items():
+    for name, metric in metrics.items():
+        direction = metric["better"]
         vals = {side: [r["metrics"][name]["value"] for r in runs[side]] for side in runs}
         sign = 1 if direction == "higher" else -1
         wins = {"new": 0, "old": 0}
@@ -69,6 +86,9 @@ def summarise(runs: dict[str, list[dict]], better: dict[str, str]) -> str:
         old_med, new_med = statistics.median(vals["old"]), statistics.median(vals["new"])
         gain = new_med / old_med if direction == "higher" else old_med / new_med
         out.append(f"{name:<14} gain {gain:>9.3f}x ({direction} is better)")
+        out.append(f"{name:<14} verdict: "
+                   f"{verdict(vals['old'], vals['new'], direction, metric['bound'])} "
+                   f"(bound {metric['bound']:g})")
     for side in ("old", "new"):
         failed = sum(r["failed"] for r in runs[side])
         attempted = sum(r["attempted"] for r in runs[side])
@@ -87,7 +107,7 @@ def main(argv=None) -> int:
 
     trees = {"old": os.path.abspath(args.old_tree), "new": os.path.abspath(args.new_tree)}
     with open(os.path.join(trees["new"], "BENCHMARK.json")) as fh:
-        better = {m["name"]: m["better"] for m in json.load(fh)["end_to_end"]}
+        metrics = {m["name"]: m for m in json.load(fh)["end_to_end"]}
     runs: dict[str, list[dict]] = {"old": [], "new": []}
     for i in range(args.pairs):
         seed = args.seed0 + i
@@ -99,7 +119,7 @@ def main(argv=None) -> int:
                               "attempted": rec["attempted"], **values}),
                   file=sys.stderr, flush=True)
     print(f"{args.workload}: {args.pairs} pairs, seeds {args.seed0}..{args.seed0 + args.pairs - 1}")
-    print(summarise(runs, better))
+    print(summarise(runs, metrics))
     wrong = sum(not r["correct"] or r["failed"] > 0 for side in runs.values() for r in side)
     if wrong:
         print(f"{wrong} run(s) reported wrong results", file=sys.stderr)
